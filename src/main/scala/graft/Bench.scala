@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success}
+import scala.util.control.NonFatal
 
 /** Benchmark main. Prints ONE compact JSON line (kept under ~1700 chars so it
   * survives log-tail truncation) and writes the complete per-query detail to
@@ -19,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   * The JSON line is printed AFTER spark.stop() with the log level raised to
   * ERROR, so it is the last line of process output — the driver's parser
   * keys on that.
+  *
+  * Failures are loud: a query (or warmup/setup pass) that throws is
+  * reported as `FAILED <name>: <exception>` on stderr, left out of every
+  * total, and makes the process exit non-zero after the JSON line — it is
+  * never timed up to the throw and read as fast.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -34,13 +41,18 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def fail(name: String, e: Throwable): Unit = {
+      System.err.println(s"FAILED $name: $e")
+      failed += name
+    }
     // untimed warmup: JIT/codegen + parquet footer reads, so the first
     // timed query doesn't absorb session start-up cost
     try {
       spark.range(1000).selectExpr("sum(id)").collect()
       Tables.lineitem(spark, sfDir).limit(1).count()
       Tables.events(spark, sfDir).limit(1).count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => fail("warmup", e) }
     // GROUND-TRUTH TWINS (VERDICT r10 #6): correctness instruments
     // whose contract REQUIRES the exact |src|·|tgt| pair table — the
     // all-pairs bitext tiers and the agreement gates that grade the
@@ -66,9 +78,13 @@ object Bench {
       case None => SparkEntry.queries
         .filter { case (n, _) => !groundTruthTwins(n) }
     }
+    // a throw aborts the query's whole measurement: it is reported and
+    // the query dropped from every total, never timed up to the throw
+    def guarded[A](name: String)(body: => A): Option[A] =
+      try Some(body) catch { case NonFatal(e) => fail(name, e); None }
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
     // Shared-pass setup (VERDICT r11 #6): materialize the two heaviest
@@ -79,7 +95,11 @@ object Bench {
     // skipped under a BENCH_ONLY filter so local single-query
     // iteration still measures a genuine cold build when asked.
     val setupTimes: Seq[(String, Double)] =
-      if (only.isEmpty) graft.queries.ExtQueries.warmSharedPasses(spark, sfDir)
+      if (only.isEmpty)
+        graft.queries.ExtQueries.warmSharedPasses(spark, sfDir).flatMap {
+          case (n, Success(t)) => Some(n -> t)
+          case (n, Failure(e)) => fail(n, e); None
+        }
       else Seq.empty
     // queries that Memo the whole result: min-of-2 would measure a cache
     // read, so their reported steady-state number is the cold run.
@@ -119,36 +139,39 @@ object Bench {
     // materialized, so the end-of-suite retry can release exactly those
     // and re-run genuinely cold (VERDICT r6 #1)
     val memoKeys = scala.collection.mutable.Map.empty[String, Set[String]]
-    val results = selected.map { case (name, fn) =>
+    val results = selected.flatMap { case (name, fn) =>
       val isFullMemo = fullMemoQueries(name)
       val recordCold = isFullMemo || coldRetryQueries(name)
-      if (recordCold) graft.queries.Memo.startRecording()
-      var t1 = time(fn)
-      if (recordCold) {
-        val (misses, hits) = graft.queries.Memo.stopRecordingWithHits()
-        memoKeys(name) = misses
-        // fake-cold guard (ADVICE r8): a fullMemo query whose timed
-        // "cold" run had ZERO misses found its entire result already in
-        // the Memo (an earlier query built it and the stale window
-        // happened not to evict it) — the official cold reading would be
-        // a ~0 s cache hit with no retry recourse, since miss-only
-        // recording recorded nothing. Release the hit entries and
-        // re-time: a genuine build, now recorded as this query's own.
-        if (isFullMemo && misses.isEmpty && hits.nonEmpty) {
-          graft.queries.Memo.release(hits)
-          graft.queries.Memo.startRecording()
-          t1 = time(fn)
-          memoKeys(name) = graft.queries.Memo.stopRecording()
+      val timed = guarded(name) {
+        if (recordCold) graft.queries.Memo.startRecording()
+        var t1 = time(fn)
+        if (recordCold) {
+          val (misses, hits) = graft.queries.Memo.stopRecordingWithHits()
+          memoKeys(name) = misses
+          // fake-cold guard (ADVICE r8): a fullMemo query whose timed
+          // "cold" run had ZERO misses found its entire result already in
+          // the Memo (an earlier query built it and the stale window
+          // happened not to evict it) — the official cold reading would be
+          // a ~0 s cache hit with no retry recourse, since miss-only
+          // recording recorded nothing. Release the hit entries and
+          // re-time: a genuine build, now recorded as this query's own.
+          if (isFullMemo && misses.isEmpty && hits.nonEmpty) {
+            graft.queries.Memo.release(hits)
+            graft.queries.Memo.startRecording()
+            t1 = time(fn)
+            memoKeys(name) = graft.queries.Memo.stopRecording()
+          }
         }
+        val t2 = time(fn)
+        val steady = if (isFullMemo) t1 else math.min(t1, t2)
+        name -> (steady, t1)
       }
-      val t2 = time(fn)
-      val steady = if (isFullMemo) t1 else math.min(t1, t2)
       // suite clock: entries untouched for a window of queries are dead
       // (Memo families are registry-adjacent) — release them so peak
       // storage tracks the recent families, not the whole 127-query run
       graft.queries.Memo.advance()
       graft.queries.Memo.releaseStale(24)
-      name -> (steady, t1)
+      timed
     }
     // ambient-stall defense: a host-level pause spanning a query's two
     // ADJACENT runs inflates its min-of-2 (observed: random queries
@@ -161,31 +184,33 @@ object Bench {
     // (a genuine rebuild), keep the min of the two colds. Without this,
     // one contended hour turned a 4.76 s dedup_span_pairs into an
     // official 25.71 s with no recourse (VERDICT r6 #1).
-    val retried = results.map { case (name, (steady, cold)) =>
-      if (coldRetryQueries(name) && cold > 2 * steady) {
-        // decorrelated second cold: release only the entries THIS
-        // query's cold run materialized (miss-only recording), rebuild
-        graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(selected(name))
-        name -> (math.min(steady, t3), math.min(cold, t3))
-      } else if (steady <= 1.0) name -> (steady, cold)
-      else if (fullMemoQueries(name)) {
-        graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
-        val t3 = time(selected(name))
-        name -> (math.min(steady, t3), math.min(cold, t3))
-      } else {
-        // Steady-regime retry (ADVICE r9 #1 generalized): mid-suite
-        // this query ran with its family's shared Memo passes warm;
-        // ~100 queries later the stale window has released them, so a
-        // direct end-of-suite re-time measures a shared-pass REBUILD,
-        // not the steady regime the min-of-2 convention reports
-        // (observed: text_split_leakage floored at ~1.7 s — the
-        // minhash-pass rebuild — while its steady cost is ~0.3 s; the
-        // family sum then read as grown when nothing regressed). One
-        // untimed warmup rebuilds whatever was released; the timed run
-        // re-measures the same warm regime as the original pair.
-        time(selected(name))
-        name -> (math.min(steady, time(selected(name))), cold)
+    val retried = results.flatMap { case (name, (steady, cold)) =>
+      guarded(name) {
+        if (coldRetryQueries(name) && cold > 2 * steady) {
+          // decorrelated second cold: release only the entries THIS
+          // query's cold run materialized (miss-only recording), rebuild
+          graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
+          val t3 = time(selected(name))
+          name -> (math.min(steady, t3), math.min(cold, t3))
+        } else if (steady <= 1.0) name -> (steady, cold)
+        else if (fullMemoQueries(name)) {
+          graft.queries.Memo.release(memoKeys.getOrElse(name, Set.empty))
+          val t3 = time(selected(name))
+          name -> (math.min(steady, t3), math.min(cold, t3))
+        } else {
+          // Steady-regime retry (ADVICE r9 #1 generalized): mid-suite
+          // this query ran with its family's shared Memo passes warm;
+          // ~100 queries later the stale window has released them, so a
+          // direct end-of-suite re-time measures a shared-pass REBUILD,
+          // not the steady regime the min-of-2 convention reports
+          // (observed: text_split_leakage floored at ~1.7 s — the
+          // minhash-pass rebuild — while its steady cost is ~0.3 s; the
+          // family sum then read as grown when nothing regressed). One
+          // untimed warmup rebuilds whatever was released; the timed run
+          // re-measures the same warm regime as the original pair.
+          time(selected(name))
+          name -> (math.min(steady, time(selected(name))), cold)
+        }
       }
     }
     val (harnessRaw, headline) = retried.partition { case (n, _) => harnessQueries(n) }
@@ -300,12 +325,13 @@ object Bench {
       .map(n => s""""$n"""").mkString("[", ", ", "]")
     val fullJson =
       s"""{\n  "metric": "total", "value": ${f(totalMin)}, "value_cold": ${f(totalCold)},\n  "unit": "sec", "timing": "min_of_2_consecutive_runs", "sf": "$sfDir",\n  "harness_sec": ${f(harnessSec)}, "memo_evictions": $memoEvictions,\n  "verify_only_ground_truth_twins": $twinsJson,\n  "families": $famFull,\n  "queries": $full,\n  "harness": $harnessFull\n}\n"""
-    // only a FULL-suite run overwrites the detail file — a filtered
-    // local iteration must not clobber the last complete picture
-    if (only.isEmpty)
+    // only a FULL, failure-free suite run overwrites the detail file — a
+    // filtered local iteration or a run with failed queries must not
+    // clobber the last complete picture
+    if (only.isEmpty && failed.isEmpty)
       try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL_local.json"),
         fullJson.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => fail("BENCH_FULL_local.json", e) }
     // compact one-liner: largest queries first, aggregate the tail into "rest"
     // so the line stays under ~1700 chars
     val sorted = headline.toSeq.sortBy { case (_, (mn, _)) => -mn }
@@ -342,5 +368,6 @@ object Bench {
     System.err.flush()
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

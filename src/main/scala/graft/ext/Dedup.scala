@@ -880,8 +880,9 @@ object Dedup {
       s"nBits must be a multiple of rowsPerBand and <= 63, got $nBits/$rowsPerBand")
     val spark = emb.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val e = graft.queries.Memo.cached(spark,
-      s"coslsh|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}")(
+    val prepKey =
+      s"coslsh|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val e = graft.queries.Memo.cached(spark, prepKey)(
       emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
         .withColumn("nrm", sqrt(call_function("array_dot", col("v"), col("v")))))
     // derive + validate the vector dimension in one tiny aggregate: an
@@ -892,8 +893,7 @@ object Dedup {
     // and re-deriving it cost one aggregate job per invocation.
     // keyed by the prep entry's INTERNAL Memo key so the onRelease hook
     // above drops this row exactly when the prep frame leaves the Memo
-    val dimKey = s"${System.identityHashCode(spark)}|coslsh|$idCol|$vecCol|" +
-      s"${emb.queryExecution.logical.semanticHash()}"
+    val dimKey = graft.queries.Memo.internalKey(spark, prepKey)
     val dimRow = dimCache.get(dimKey) match {
       case Some(r) => r
       case None => // the aggregate job runs outside any map lock

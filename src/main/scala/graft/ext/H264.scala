@@ -2,9 +2,8 @@ package graft.ext
 
 /** H.264/AVC (ITU-T Rec. H.264 / ISO-IEC 14496-10, public spec)
   * INTRA-frame codec — the round-12 second narrowing of the
-  * predictive-codec fence (VERDICT r11 "what's missing" #3): after
-  * [[Mpeg1]] covered the classic-codec intra path, this covers the
-  * MODERN 'avc1' 4cc for the macroblock families a pure-JVM decoder
+  * predictive-codec fence (VERDICT r11 "what's missing" #3): it
+  * covers the MODERN 'avc1' 4cc for the macroblock families a pure-JVM decoder
   * can be exactly right about. Reference behavior: the reference app
   * never decodes video at all (app.py has no video path); this tier
   * exists for the 100-TB curation pipeline, where avc1 is the single
@@ -26,8 +25,7 @@ package graft.ext
   *    inverse 4x4 DC Hadamard and the 4x4 core transform.
   *
   * Honesty bounds, all degrade-to-None (the caller falls back to the
-  * byte-histogram fence, never a WRONG decode — the [[Mpeg1]]
-  * discipline):
+  * byte-histogram fence, never a WRONG decode):
   *  - I and P slices. Round 13 widened P from the old
   *    single-16x16-cbp0 subset to the profile's full P toolset:
   *    EVERY partition shape (P_L0_16x16, P_L0_L0_16x8 / 8x16 with
@@ -5158,7 +5156,7 @@ object H264 {
     // renorm lockstep with the encoder's emissions (D = R + 9 = E at
     // every flush), so a VALID slice never reads past its own bytes —
     // any overrun means a truncated stream "completed" on fabricated
-    // zero bits and must degrade, never emit (the Mpeg1 discipline)
+    // zero bits and must degrade, never emit
     if (dec.overrun > 0) return None
     st.mbNext = mb
     Some(st)

@@ -490,9 +490,8 @@ private[graft] object H264Cabac {
     "the three idc residual columns must be pairwise distinct")
 
   /** Context-state pool for one slice: pStateIdx + valMPS per ctxIdx,
-    * initialized per 9.3.1.1 (the same formula HEVC 9.3.2.2 uses —
-    * round 14: the pool is init-table generic so [[Hevc]] reuses this
-    * exact engine) from flattened (m, n) pairs at SliceQPY. Shared
+    * initialized per 9.3.1.1 from flattened (m, n) pairs at SliceQPY
+    * (the pool is init-table generic: the table is a parameter). Shared
     * shape between encode and decode — the fixture encoders build the
     * SAME pool so round-trip is by construction. */
   final class Ctx(qp: Int, init: Array[Int]) {

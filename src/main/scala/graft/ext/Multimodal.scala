@@ -9,17 +9,17 @@ import org.apache.spark.sql.functions._
   * deterministic generated bitmaps. AUDIO decode is REAL —
   * javax.sound.sampled (pure JDK: WAV/AIFF/AU containers, PCM),
   * oracle-checked on deterministic generated WAVs. VIDEO pixel decode
-  * is REAL for Motion-JPEG tracks (first MP4 sample located via the
-  * container tables, decoded with the same ImageIO), oracle-checked on
-  * deterministic MJPEG-in-MP4 fixtures. Payloads none of those paths
-  * recognize fall back to byte-histogram moments; that fallback is the
-  * one remaining STUB, and only for what genuinely needs a native
-  * decoder: H.264 beyond the decoded subset (inter residuals, other
-  * partitions, B slices, CABAC) and hev1. MPEG-1 decodes FULLY — I,
-  * P and B pictures — and H.264 decodes baseline-intra PLUS
-  * single-reference P slices (quarter-pel MC, P_Skip, intra
-  * refresh), all pure-JVM (rounds 12/12b) — swap the fence for an
-  * ffmpeg binding in production, nothing around it changes.
+  * is REAL for Motion-JPEG — MJPEG tracks in MP4 (samples located
+  * via the container tables) and MJPEG chunks in AVI, each frame
+  * decoded with the same ImageIO — and for H.264/avc1 (raw Annex-B
+  * streams and avc1 tracks in MP4) through the pure-JVM [[H264]]
+  * decoder, each oracle-checked on deterministic fixtures. Other
+  * predictive video (hev1/mp4v/vp09/av01 samples) is read at the
+  * CONTAINER level only: codec 4cc, duration, keyframe and
+  * sample-size tables. Its pixels, like any payload none of the
+  * decode paths recognize, fall to byte-histogram moments with
+  * `decoded = false` — the one fence, where a native decoder binding
+  * (ffmpeg) would plug in without changing anything around it.
   *
   * Scale notes: decode is mapPartitions (one codec init per partition,
   * not per row — the same shape a Pandas-UDF/mapInPandas batch has);
@@ -600,19 +600,6 @@ object Multimodal {
       }
     }
 
-  /** REAL video pixel decode for MJPEG-in-AVI — the second all-intra
-    * public container covered pure-JDK (VERDICT r8 #7; AVI-1.0 RIFF
-    * layout per the public msdn/OpenDML spec): walk the RIFF
-    * ('RIFF'<size>'AVI ') top-level chunks to the 'movi' LIST, and
-    * decode its video data chunks ('##dc' compressed / '##db'
-    * uncompressed, stream-numbered 4ccs, WORD-aligned with a pad byte
-    * after odd sizes) as JPEG via the same ImageIO path as the MP4
-    * track decode. Emits (frame ordinal among video chunks, 1-based,
-    * width, height, meanGray, stdGray), at most `maxFrames` decodes
-    * (bounded like [[decodeMjpegFrames]]). Chunks that fail to decode
-    * are skipped WITHOUT renumbering — degrade, never throw; empty
-    * for non-AVI payloads. All sizes little-endian (RIFF), vs MP4's
-    * big-endian boxes. */
   /** Scene-cut detection over per-frame pixel statistics ([EXT]): flag
     * frame transitions whose mean-luma jump exceeds `thresh` — the
     * shot-boundary pre-pass of a video curation pipeline (sample one
@@ -662,6 +649,19 @@ object Multimodal {
           abs(col("mean_v") - col("__pv")) >= threshC).as("is_cut"))
   }
 
+  /** REAL video pixel decode for MJPEG-in-AVI — the second all-intra
+    * public container covered pure-JDK (VERDICT r8 #7; AVI-1.0 RIFF
+    * layout per the public msdn/OpenDML spec): walk the RIFF
+    * ('RIFF'<size>'AVI ') top-level chunks to the 'movi' LIST, and
+    * decode its video data chunks ('##dc' compressed / '##db'
+    * uncompressed, stream-numbered 4ccs, WORD-aligned with a pad byte
+    * after odd sizes) as JPEG via the same ImageIO path as the MP4
+    * track decode. Emits (frame ordinal among video chunks, 1-based,
+    * width, height, meanGray, stdGray), at most `maxFrames` decodes
+    * (bounded like [[decodeMjpegFrames]]). Chunks that fail to decode
+    * are skipped WITHOUT renumbering — degrade, never throw; empty
+    * for non-AVI payloads. All sizes little-endian (RIFF), vs MP4's
+    * big-endian boxes. */
   private[graft] def decodeAviMjpegFrames(bytes: Array[Byte],
       maxFrames: Int): Seq[(Int, Int, Int, Double, Double)] = {
     def fcc(off: Int): String =
@@ -827,169 +827,6 @@ object Multimodal {
     ftyp ++ mdat ++ box("moov", mvhd ++ trak)
   }
 
-  /** REAL video pixel decode for MPEG-1 INTRA tracks (round 12,
-    * VERDICT r11 #7 — the predictive-codec fence narrowed again):
-    * samples of an 'mp4v' track whose payload opens with the MPEG-1
-    * sequence-header start code (00 00 01 B3) are decoded pure-JVM by
-    * [[Mpeg1]] (headers, DC/AC VLCs, intra dequant, IDCT); raw
-    * elementary-stream payloads decode as a single frame. Same
-    * bounded walk and degrade discipline as [[decodeMjpegFrames]]:
-    * at most `maxFrames` decodes, failures skip, empty for anything
-    * that is not MPEG-1 intra. */
-  private[graft] def decodeMpeg1Frames(bytes: Array[Byte],
-      maxFrames: Int): Seq[(Int, Int, Int, Double, Double)] =
-    decodeMpeg1FramesTyped(bytes, maxFrames)
-      .map { case (f, _, w, h, m, sd) => (f, w, h, m, sd) }
-
-  /** Like [[decodeMpeg1Frames]] but carrying the picture type
-    * ('I'/'P') — the inter paths (round 12b) decode P-pictures for
-    * real, so consumers can see which frames were keyframes. Each
-    * payload (raw ES, or each MP4 sample — every sample is its own
-    * elementary stream) may contain MULTIPLE pictures; frame indices
-    * run across the whole payload in decode order. */
-  private[graft] def decodeMpeg1FramesTyped(bytes: Array[Byte],
-      maxFrames: Int): Seq[(Int, Char, Int, Int, Double, Double)] = {
-    def lumaStats(luma: Array[Int]): (Double, Double) = {
-      var s = 0.0; var sq = 0.0
-      var i = 0
-      while (i < luma.length) {
-        val v = luma(i).toDouble; s += v; sq += v * v; i += 1
-      }
-      val n = math.max(1, luma.length)
-      val mean = s / n
-      (mean, math.sqrt(math.max(0.0, sq / n - mean * mean)))
-    }
-    def isEs(off: Long): Boolean =
-      off >= 0 && off + 4 <= bytes.length &&
-        bytes(off.toInt) == 0 && bytes(off.toInt + 1) == 0 &&
-        bytes(off.toInt + 2) == 1 && (bytes(off.toInt + 3) & 0xFF) == 0xB3
-    def esFrames(es: Array[Byte], limit: Int): (Seq[(Char, Int, Int, Double, Double)], Boolean) = {
-      val (fs, clean) = Mpeg1.decodeFramesLumaClean(es, limit)
-      (fs.map { case (w, h, l, t) =>
-        val (m, sd) = lumaStats(l); (t, w, h, m, sd)
-      }, clean)
-    }
-    if (isEs(0L))
-      esFrames(bytes, maxFrames)._1.zipWithIndex.map { case ((t, w, h, m, sd), i) =>
-        (i + 1, t, w, h, m, sd)
-      }
-    else trackSamples(bytes).toSeq.flatMap { tracks =>
-      tracks.collectFirst {
-        case (c, off, sizes) if c == "mp4v" && sizes.nonEmpty && isEs(off) =>
-          (off, sizes)
-      }.toSeq.flatMap { case (off, sizes) =>
-        val bounded = sizes.take(maxFrames)
-        val starts = bounded.scanLeft(off)(_ + _)
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, Char, Int, Int, Double, Double)]
-        // ADVICE r12: mirror the avc1 walk's stop-at-first-undecodable
-        // discipline. Skipping bad samples and numbering by decoded
-        // count compacted frame indices, so downstream consumers (e.g.
-        // scene-cut deltas) saw non-adjacent frames as adjacent; a
-        // clean stop makes the truncation visible instead. ADVICE r13:
-        // a sample that decodes a nonempty PREFIX and then degrades
-        // is the same gap — the decoder now reports clean/partial, and
-        // a partial sample ends the walk too (its exact prefix frames
-        // are kept; nothing after the gap is renumbered).
-        var walking = true
-        bounded.indices.foreach { i =>
-          if (walking && acc.size < maxFrames) {
-            val s = starts(i)
-            val len = bounded(i)
-            if (s >= 0 && len > 0 && s + len <= bytes.length) {
-              val (fs, clean) = esFrames(java.util.Arrays.copyOfRange(
-                bytes, s.toInt, (s + len).toInt), maxFrames - acc.size)
-              if (!clean || fs.isEmpty) walking = false
-              fs.foreach { case (t, w, h, m, sd) =>
-                acc += ((acc.size + 1, t, w, h, m, sd))
-              }
-            } else walking = false
-          }
-        }
-        acc.toSeq
-      }
-    }
-  }
-
-  /** Deterministic MPEG-1 MOTION fixture (raw elementary stream):
-    * one 32×32 I-picture (16 flat DC blocks, g_{mb,b} =
-    * (id·7 + mb·16 + b·4 + 50) mod 200 + 10), then P1 — every
-    * macroblock zero-MV with a flat coded residual (level
-    * L = id mod 5 + 1 at qscale 8 adds exactly 2L+1 per pixel) — then
-    * P2 mixing real motion (MB1 ← 8 px left, MB2 ← 8 px up), a
-    * zero-MV copy, and a second residual — then a B-picture
-    * exercising every bidirectional path (forward ← P1, backward ←
-    * P2, interpolated average, forward + residual). Every decoded
-    * mean is a closed-form k/16 of id — the inter-path oracle. */
-  def syntheticMpeg1MotionEs(id: Long): Array[Byte] = {
-    def dc(mb: Int, b: Int): Int =
-      (((id * 7 + mb * 16 + b * 4 + 50) % 200) + 10).toInt
-    val l = (id % 5).toInt + 1
-    import Mpeg1.{PMb, BMb, PPic, BPic}
-    Mpeg1.encodeSequence(2, 2, dc, Seq(
-      PPic(_ => PMb.MoveCoded(0, 0, _ => Seq((0, l)))),
-      PPic({
-        case 0 => PMb.Move(0, 0)
-        case 1 => PMb.Move(-16, 0)
-        case 2 => PMb.Move(0, -16)
-        case _ => PMb.MoveCoded(0, 0, _ => Seq((0, l)))
-      }),
-      BPic({
-        case 0 => BMb.Fwd(0, 0) // ← P1 (the OLDER anchor)
-        case 1 => BMb.Bwd(0, 0) // ← P2
-        case 2 => BMb.Bi(0, 0, 0, 0) // rounded (P1 + P2 + 1) >> 1
-        case _ => BMb.FwdCoded(0, 0, _ => Seq((0, l))) // P1 + delta
-      })))
-  }
-
-  /** First-frame convenience over [[decodeMpeg1Frames]] — the decode
-    * dispatch's MPEG-1-intra hook, shaped like the MJPEG one. */
-  private[graft] def decodeMpeg1FirstFrame(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] =
-    decodeMpeg1Frames(bytes, 1).headOption
-      .map { case (_, w, h, mean, std) => (w, h, Array(mean, std)) }
-
-  /** Deterministic MPEG-1-in-MP4 fixture: same container layout and
-    * the SAME quadrant values as [[syntheticMjpegMp4]] —
-    * g_{q,f} = (id·(31+6q) + 11+5q + 29f) mod 256 — but each sample is
-    * an [[Mpeg1.encodeIFrame]] DC-only I-frame under an 'mp4v' stsd
-    * entry. DC-only blocks are exact through dequant+IDCT (pixel =
-    * DC/8, an integer), so one oracle formula covers both codecs. */
-  def syntheticMpeg1Mp4(id: Long, nFrames: Int = 1): Array[Byte] = {
-    require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
-    def be32(v: Long) = Array[Byte](
-      ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      be32(8L + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
-    val samples = (0 until nFrames).map { f =>
-      Mpeg1.encodeIFrame(1, 1, (_, q) =>
-        ((id * (31 + 6 * q) + 11 + 5 * q + 29L * f) % 256).toInt)
-    }
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(0) ++ "mp41".getBytes("US-ASCII"))
-    val mdat = box("mdat", samples.flatten.toArray)
-    val mdatPayloadOff = ftyp.length + 8L
-    val mvhd = box("mvhd",
-      be32(0) ++ be32(0) ++ be32(0) ++
-        be32(1000) ++ be32((id * 97 + 41) % 100000) ++
-        be32(0x00010000L) ++
-        Array[Byte](0x01, 0x00) ++ new Array[Byte](10) ++
-        new Array[Byte](36) ++ new Array[Byte](24) ++
-        be32(2))
-    val stsd = box("stsd", be32(0) ++ be32(1) ++
-      box("mp4v", new Array[Byte](8)))
-    val stsz = box("stsz", be32(0) ++ be32(0) ++ be32(nFrames.toLong) ++
-      samples.flatMap(j => be32(j.length.toLong)).toArray)
-    val stss = box("stss", be32(0) ++ be32(nFrames.toLong) ++
-      (1 to nFrames).flatMap(f => be32(f.toLong)).toArray)
-    val stco = box("stco", be32(0) ++ be32(1) ++ be32(mdatPayloadOff))
-    val stbl = box("stbl", stsd ++ stsz ++ stss ++ stco)
-    val trak = box("trak",
-      box("tkhd", be32(0) ++ be32(0) ++ be32(0) ++ be32(1)) ++
-        box("mdia", box("minf", stbl)))
-    ftyp ++ mdat ++ box("moov", mvhd ++ trak)
-  }
-
   /** avcC decoder configuration (ISO 14496-15 §5.3.3) of the FIRST
     * 'avc1' track: (SPS NAL units, PPS NAL units, NAL length-prefix
     * size). The avcC box lives inside the avc1 VisualSampleEntry
@@ -1090,7 +927,7 @@ object Multimodal {
       .map { case (f, _, w, h, m, sd) => (f, w, h, m, sd) }
 
     /** First-frame convenience over [[decodeAvcFrames]] — the decode
-    * dispatch's avc1 hook, shaped like the MJPEG/MPEG-1 ones. */
+    * dispatch's avc1 hook, shaped like the MJPEG one. */
   private[graft] def decodeAvcFirstFrame(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] =
     decodeAvcFrames(bytes, 1).headOption
       .map { case (_, w, h, mean, std) => (w, h, Array(mean, std)) }
@@ -1161,136 +998,6 @@ object Multimodal {
     }
   }
 
-  /** Extract the HEVCDecoderConfigurationRecord NALs from an MP4
-    * 'hev1'/'hvc1' track: (parameter-set NALs in array order, NAL
-    * length-prefix size). hvcC lives in the VisualSampleEntry like
-    * avcC; its fixed head is 22 bytes, then typed NAL arrays
-    * (ISO 14496-15). None on anything malformed — degrade. */
-  private[graft] def hevcConfig(bytes: Array[Byte]): Option[(Seq[Array[Byte]], Int)] = {
-    val bw = new BoxWalker(bytes)
-    import bw.{u32, walk, descend}
-    try {
-      var found: Option[(Seq[Array[Byte]], Int)] = None
-      walk(0, bytes.length) { (typ, off, end) =>
-        if (typ == "moov" && found.isEmpty) {
-          walk(off, end) { (t, o, e) =>
-            if (t == "trak" && found.isEmpty) {
-              descend(o, e, List("mdia", "minf", "stbl")) { (t4, o4, e4) =>
-                if (t4 == "stsd" && found.isEmpty && e4 - o4 >= 16 &&
-                    u32(o4 + 4) >= 1) {
-                  val entryOff = o4 + 8
-                  val entrySize = u32(entryOff).toInt
-                  val cc = if (entryOff + 8 <= e4)
-                    new String(bytes, entryOff + 4, 4, "US-ASCII") else ""
-                  if (entrySize >= 94 && entryOff + entrySize <= e4 &&
-                      (cc == "hev1" || cc == "hvc1")) {
-                    walk(entryOff + 86, entryOff + entrySize) { (t5, o5, e5) =>
-                      if (t5 == "hvcC" && found.isEmpty && e5 - o5 >= 23)
-                        found = parseHvcC(bytes, o5, e5)
-                    }
-                    ()
-                  }
-                }
-              }
-            }
-          }
-          ()
-        }
-      }
-      found
-    } catch { case _: Exception => None }
-  }
-
-  private def parseHvcC(bytes: Array[Byte], o5: Int,
-      e5: Int): Option[(Seq[Array[Byte]], Int)] = {
-    val lenSize = (bytes(o5 + 21) & 3) + 1
-    val nArrays = bytes(o5 + 22) & 0xFF
-    val nals = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    var p = o5 + 23
-    var a = 0
-    while (a < nArrays) {
-      if (p + 3 > e5) return None
-      val count = ((bytes(p + 1) & 0xFF) << 8) | (bytes(p + 2) & 0xFF)
-      p += 3
-      var i = 0
-      while (i < count) {
-        if (p + 2 > e5) return None
-        val n = ((bytes(p) & 0xFF) << 8) | (bytes(p + 1) & 0xFF)
-        if (p + 2 + n > e5) return None
-        nals += java.util.Arrays.copyOfRange(bytes, p + 2, p + 2 + n)
-        p += 2 + n
-        i += 1
-      }
-      a += 1
-    }
-    if (nals.nonEmpty) Some((nals.toSeq, lenSize)) else None
-  }
-
-  /** Bounded multi-frame HEVC intra walk (round 14): raw Annex-B
-    * streams AND MP4 'hev1'/'hvc1' tracks (hvcC parameter sets +
-    * length-prefixed samples), shaped like [[decodeAvcFrames]]. The
-    * stop-at-first-undecodable discipline applies; each IDR picture
-    * is independent (no inter in the starter subset, so there is no
-    * cross-sample reference hazard to guard). */
-  private[graft] def decodeHevcFrames(bytes: Array[Byte],
-      maxFrames: Int): Seq[(Int, Int, Int, Double, Double)] = {
-    def stat(fs: Seq[(Int, Int, Array[Int])]) =
-      fs.zipWithIndex.map { case ((w, h, l), i) =>
-        var s = 0.0; var sq = 0.0
-        l.foreach { v => s += v; sq += v.toDouble * v }
-        val n = math.max(1, l.length)
-        val m = s / n
-        (i + 1, w, h, m, math.sqrt(math.max(0.0, sq / n - m * m)))
-      }
-    def isAnnexB: Boolean = {
-      var p = 0
-      if (bytes.length >= 6 && bytes(0) == 0 && bytes(1) == 0) {
-        if (bytes(2) == 1) p = 3
-        else if (bytes(2) == 0 && bytes(3) == 1) p = 4
-      }
-      p > 0 && p + 1 < bytes.length && {
-        val t = (bytes(p) >> 1) & 0x3F
-        t == 32 || t == 33 || t == 34 || t == 35 || t == 39
-      }
-    }
-    if (isAnnexB) stat(Hevc.decodeFramesLuma(bytes, maxFrames))
-    else {
-      (for {
-        tracks <- trackSamples(bytes)
-        (off, sizes) <- tracks.collectFirst {
-          case (c, o, ss) if (c == "hev1" || c == "hvc1") && ss.nonEmpty =>
-            (o, ss)
-        }
-        (psNals, lenSize) <- hevcConfig(bytes)
-      } yield {
-        val bounded = sizes.take(maxFrames)
-        val starts = bounded.scanLeft(off)(_ + _)
-        val nals = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-        var ok = true
-        var i = 0
-        while (ok && i < bounded.length) {
-          val s = starts(i)
-          val len = bounded(i)
-          if (s < 0 || len <= 0 || s + len > bytes.length) ok = false
-          else splitLengthPrefixed(
-            java.util.Arrays.copyOfRange(bytes, s.toInt, (s + len).toInt),
-            lenSize) match {
-            case Some(ns) => nals ++= ns
-            case None => ok = false
-          }
-          i += 1
-        }
-        stat(Hevc.decodeFramesLumaNals(psNals ++ nals.toSeq, maxFrames))
-      }).getOrElse(Seq.empty)
-    }
-  }
-
-  /** First-frame convenience over [[decodeHevcFrames]] — the decode
-    * dispatch's hev1 hook (round 14). */
-  private[graft] def decodeHevcFirstFrame(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] =
-    decodeHevcFrames(bytes, 1).headOption
-      .map { case (_, w, h, mean, std) => (w, h, Array(mean, std)) }
-
   /** YUV stats decode (round 14, chroma reconstruction): per frame
     * (frame, type, w, h, mean_y, mean_u, std_u, mean_v, std_v) over
     * an Annex-B stream — the curation tier's color-statistics hook
@@ -1319,8 +1026,8 @@ object Multimodal {
     * PCM quadrants (exact pixels), then P1 — MB0 a zero-MV copy, MB1
     * an Intra_16x16 refresh whose DC predicts from MB0's
     * reconstructed right edge — then P2 with real ±8 px motion whose
-    * out-of-plane fetches exercise H.264's edge CLAMP (unlike
-    * MPEG-1, vectors may point outside the picture). qp 28 makes the
+    * out-of-plane fetches exercise H.264's edge CLAMP (vectors may
+    * point outside the picture). qp 28 makes the
     * intra residual exact (pixel = pred + z), so every frame mean is
     * closed-form in id. */
   def syntheticAvcMotionEs(id: Long): Array[Byte] = {
@@ -1342,14 +1049,14 @@ object Multimodal {
   }
 
   /** Deterministic H.264-in-MP4 fixture: the same container layout
-    * and the SAME quadrant values as [[syntheticMjpegMp4]] /
-    * [[syntheticMpeg1Mp4]] — g_{q,f} = (id·(31+6q) + 11+5q + 29f)
+    * and the SAME quadrant values as [[syntheticMjpegMp4]] —
+    * g_{q,f} = (id·(31+6q) + 11+5q + 29f)
     * mod 256 — but each sample is one IDR slice of a single-MB 16x16
     * I_PCM frame (raw pixels: exact by construction), under a REAL
     * 'avc1' sample entry with an avcC record (SPS/PPS + 4-byte NAL
     * length prefixes), so the decode exercises the genuine
     * avcC→length-prefixed-NAL path a real avc1 file takes. One
-    * oracle formula covers all three codecs. */
+    * oracle formula covers both codecs. */
   def syntheticAvcMp4(id: Long, nFrames: Int = 1): Array[Byte] = {
     require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
     def be32(v: Long) = Array[Byte](
@@ -1391,69 +1098,6 @@ object Multimodal {
         new Array[Byte](36) ++ new Array[Byte](24) ++
         be32(2))
     val stsd = box("stsd", be32(0) ++ be32(1) ++ box("avc1", visual ++ avcC))
-    val stsz = box("stsz", be32(0) ++ be32(0) ++ be32(nFrames.toLong) ++
-      samples.flatMap(j => be32(j.length.toLong)).toArray)
-    val stss = box("stss", be32(0) ++ be32(nFrames.toLong) ++
-      (1 to nFrames).flatMap(f => be32(f.toLong)).toArray)
-    val stco = box("stco", be32(0) ++ be32(1) ++ be32(mdatPayloadOff))
-    val stbl = box("stbl", stsd ++ stsz ++ stss ++ stco)
-    val trak = box("trak",
-      box("tkhd", be32(0) ++ be32(0) ++ be32(0) ++ be32(1)) ++
-        box("mdia", box("minf", stbl)))
-    ftyp ++ mdat ++ box("moov", mvhd ++ trak)
-  }
-
-  /** Deterministic HEVC-in-MP4 fixture (round 14): same container
-    * layout and the SAME quadrant values as [[syntheticAvcMp4]] —
-    * g_{q,f} = (id*(31+6q) + 11+5q + 29f) mod 256 — but each sample
-    * is one IDR slice whose single CTU quad-splits into four I_PCM
-    * 8x8 CUs (exact pixels), under a REAL 'hev1' sample entry with an
-    * hvcC record (VPS-less parameter arrays + 4-byte NAL length
-    * prefixes), so the decode exercises the genuine
-    * hvcC -> length-prefixed-NAL path a real hev1 file takes. */
-  def syntheticHevcMp4(id: Long, nFrames: Int = 1): Array[Byte] = {
-    require(nFrames >= 1, s"nFrames must be >= 1, got $nFrames")
-    def be32(v: Long) = Array[Byte](
-      ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def be16(v: Int) = Array[Byte](((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      be32(8L + payload.length) ++ typ.getBytes("US-ASCII") ++ payload
-    val sps = Hevc.spsNal(16, 16)
-    val pps = Hevc.ppsNal(28)
-    val samples = (0 until nFrames).map { f =>
-      val idr = Hevc.idrNal(1, 1, _ => Hevc.Quad((0 until 4).map { q =>
-        Hevc.HPcm((_, _) =>
-          ((id * (31 + 6 * q) + 11 + 5 * q + 29L * f) % 256).toInt)
-      }), qp = 28)
-      be32(idr.length.toLong) ++ idr
-    }
-    val hvcC = box("hvcC",
-      Array[Byte](1) ++ new Array[Byte](12) ++ // profile block
-        Array[Byte](0xF0.toByte, 0, 0xFC.toByte, 0xFD.toByte, 0xF8.toByte,
-          0xF8.toByte) ++ be16(0) ++ // reserved/chroma/depth/fps fields
-        Array[Byte](3) ++ // flags | lengthSizeMinusOne = 3
-        Array[Byte](2) ++ // numOfArrays: SPS + PPS
-        Array[Byte](33) ++ be16(1) ++ be16(sps.length) ++ sps ++
-        Array[Byte](34) ++ be16(1) ++ be16(pps.length) ++ pps)
-    val visual =
-      new Array[Byte](6) ++ be16(1) ++
-        new Array[Byte](16) ++
-        be16(16) ++ be16(16) ++
-        be32(0x00480000L) ++ be32(0x00480000L) ++ be32(0) ++
-        be16(1) ++ new Array[Byte](32) ++ be16(24) ++ be16(0xFFFF)
-    val ftyp = box("ftyp",
-      "isom".getBytes("US-ASCII") ++ be32(0) ++ "mp41".getBytes("US-ASCII"))
-    val mdat = box("mdat", samples.flatten.toArray)
-    val mdatPayloadOff = ftyp.length + 8L
-    val mvhd = box("mvhd",
-      be32(0) ++ be32(0) ++ be32(0) ++
-        be32(1000) ++ be32((id * 97 + 41) % 100000) ++
-        be32(0x00010000L) ++
-        Array[Byte](0x01, 0x00) ++ new Array[Byte](10) ++
-        new Array[Byte](36) ++ new Array[Byte](24) ++
-        be32(2))
-    val stsd = box("stsd", be32(0) ++ be32(1) ++ box("hev1", visual ++ hvcC))
     val stsz = box("stsz", be32(0) ++ be32(0) ++ be32(nFrames.toLong) ++
       samples.flatMap(j => be32(j.length.toLong)).toArray)
     val stss = box("stss", be32(0) ++ be32(nFrames.toLong) ++
@@ -1518,19 +1162,13 @@ object Multimodal {
     ftyp ++ box("moov", mvhd ++ traks)
   }
 
-  /** Fallback for payloads that are NOT decodable images: byte
-    * histogram moments standing in for real feature extraction.
-    * STUB — and the fence keeps narrowing: [[parseMp4Metadata]] reads
-    * real video CONTAINER metadata codec-free,
-    * [[decodeMjpegFirstFrame]] decodes real PIXELS for Motion-JPEG
-    * tracks, and (round 12) [[decodeMpeg1FirstFrame]] +
-    * [[decodeAvcFirstFrame]] decode real pixels for MPEG-1 INTRA
-    * frames and H.264/avc1 intra frames (I_PCM + Intra_16x16 CAVLC
-    * subset) via the pure-JVM [[Mpeg1]]/[[H264]] decoders. What
-    * remains stubbed is inter-frame (P/B) decode, H.264 features
-    * beyond that intra subset (CABAC, I_NxN, deblocking), and hev1 —
-    * which genuinely need ffmpeg; replace this body with that binding
-    * in production, nothing around it changes. */
+  /** Fallback for payloads no decode path recognizes: byte histogram
+    * moments standing in for real feature extraction. STUB — the fence
+    * for hev1/mp4v/vp09/av01 video pixels, H.264 streams outside the
+    * [[H264]] decoder's subset, and non-media payloads.
+    * [[parseMp4Metadata]] reads such video's CONTAINER metadata
+    * codec-free; replace this body with a native decoder binding in
+    * production, nothing around it changes. */
   private[ext] def byteHistogram(bytes: Array[Byte]): (Int, Int, Array[Double]) = {
     // >>> STUB: byte-histogram stand-in (video FRAME decode only) <<<
     val hist = new Array[Double](16)
@@ -1542,22 +1180,17 @@ object Multimodal {
     // >>> END STUB <<<
   }
 
-  /** Decode dispatch: real image decode first, then real MJPEG-track
-    * pixel decode for MP4 AND AVI payloads, then real MPEG-1, H.264
-    * and (round 14) HEVC-intra pixel decode, byte-histogram fallback
-    * for everything else (non-media payloads and out-of-subset
-    * video — H.264 CABAC P/B and direct modes, HEVC beyond the
-    * planar/DC/PCM intra starter, vp09/av01). MPEG-1 decodes fully
-    * (I/P/B/D); H.264 decodes I/P/B with CABAC I, reordering, MMCO
-    * op 1 and full chroma. The boolean is the
-    * DEGRADE flag: true for real pixels, false for the fallback — the
-    * permanent-fence contract consumers filter on. */
+  /** Decode dispatch: real ImageIO image decode first, then real
+    * first-frame pixel decode of MJPEG tracks in MP4 and AVI, then of
+    * H.264 (Annex-B streams and avc1 tracks), then the byte-histogram
+    * fallback for everything else (hev1/mp4v/vp09/av01 video,
+    * non-media payloads). The boolean is the DEGRADE flag: true for
+    * real pixels, false for the fallback — the permanent-fence
+    * contract consumers filter on. */
   private[graft] def decode(bytes: Array[Byte]): (Int, Int, Array[Double], Boolean) =
     decodeImage(bytes)
       .orElse(decodeMjpegFirstFrame(bytes))
-      .orElse(decodeMpeg1FirstFrame(bytes))
       .orElse(decodeAvcFirstFrame(bytes))
-      .orElse(decodeHevcFirstFrame(bytes)) // round 14: intra starter
       .map { case (w, h, f) => (w, h, f, true) }
       .getOrElse {
         val (w, h, f) = byteHistogram(bytes)

@@ -46,7 +46,7 @@ object Ivf {
           val t = new Thread(r, "pq-subfit"); t.setDaemon(true); t
         }))
   graft.queries.Memo.onRelease { internalKey =>
-    // internal keys are "sessionHash|callerKey"; our callerKeys start
+    // internal keys are "sessionUUID|callerKey"; our callerKeys start
     // with "ivf|" / "pq|" and are exactly the driver-cache keys
     val raw = internalKey.substring(internalKey.indexOf('|') + 1)
     if (raw.startsWith("ivf|")) centersCache.remove(raw)

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** Int64-safety gate counts, keyed by the SAME internal key as the
-    * Memo'd predge frame ("sessionHash|predge|…") and dropped in
+    * Memo'd predge frame ("sessionUUID|predge|…") and dropped in
     * lockstep with it (ADVICE r17): if the Memo releases the edge
     * frame (staleness, eviction, explicit release) the scalar goes
     * too, so a node source that grows within a session is recounted
@@ -82,8 +82,7 @@ object Graph {
     val predgeKey = s"predge|" +
       s"${nodes.queryExecution.logical.semanticHash()}|" +
       s"${edges.queryExecution.logical.semanticHash()}"
-    val gateKey =
-      s"${System.identityHashCode(nodes.sparkSession)}|$predgeKey"
+    val gateKey = graft.queries.Memo.internalKey(nodes.sparkSession, predgeKey)
     val nNodes = gateCounts.get(gateKey) match {
       case Some(n) => n
       case None =>

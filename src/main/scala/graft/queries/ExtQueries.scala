@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{aggregate, array, broadcast, ceil, col, expr, explode, collect_list, concat, concat_ws, conv, corr, count, countDistinct, floor, greatest, least, length, lit, log, lower, lpad, max, md5, round, row_number, size, slice, sort_array, split, struct, substring, sum, transform, trim, upper, when}
 import graft.Tables
 import graft.ext.{Bpe, Dedup, Similarity, TextOps}
+import scala.util.Try
 
 /** [EXT] training-data-pipeline queries over `documents`/`embeddings`:
   * dedup (exact / Jaccard / MinHash-LSH / SimHash / cosine), similarity
@@ -193,9 +194,9 @@ object ExtQueries {
     * In a production pipeline these are ingest-time materializations,
     * not query cost; the bench times each and reports them in the
     * HARNESS section so cold totals grade queries, not shared ingest.
-    * Returns (pass name, seconds). */
-  def warmSharedPasses(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(body: => Unit): (String, Double) = {
+    * Returns (pass name, seconds), or the pass's failure. */
+  def warmSharedPasses(s: SparkSession, dir: String): Seq[(String, Try[Double])] = {
+    def timed(name: String)(body: => Unit): (String, Try[Double]) = {
       // min-of-2 (VERDICT r14 #4): setup passes were single-sample,
       // so one burst of box contention (the r14 driver record's
       // setup_token_pass 11 s -> 36 s with unchanged code) landed
@@ -206,17 +207,19 @@ object ExtQueries {
       // are PROTECTED from staleness release until their first
       // consumer (round 13, VERDICT r12 #6) and the reported time is
       // the min of the two samples.
+      // a failed build is returned, never timed: the second build is
+      // skipped and the caller reports the pass as failed
+      def once(): Try[Double] = {
+        val t0 = System.nanoTime()
+        Try(body).map(_ => (System.nanoTime() - t0) / 1e9)
+      }
       Memo.startRecording()
-      val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      val d0 = (System.nanoTime() - t0) / 1e9
+      val d0 = once()
       Memo.release(Memo.stopRecording())
       Memo.startRecording()
-      val t1 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      val d1 = (System.nanoTime() - t1) / 1e9
+      val d = d0.flatMap(a => once().map(math.min(a, _)))
       Memo.protect(Memo.stopRecording())
-      (name, math.min(d0, d1))
+      (name, d)
     }
     Seq(
       timed("setup_minhash_pass") { minhashPairs(s, dir).count(); () },

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** S3 scan memoization (app.py:156-178 → df.cache()), shared by the ML
   * and [EXT] query families: one cached DataFrame per (session, key).
-  * The key includes the session identity so a cached plan bound to a
-  * stopped session is never replayed into a new one.
+  * The internal key ([[internalKey]]) leads with the session's
+  * `sessionUUID` — unique per session, unlike an identity hash — so a
+  * cached plan bound to a stopped session is never replayed into a new
+  * one.
   *
   * Sizing is STRUCTURAL, not hand-tuned. Three incidents (round-3
   * minhash 39 s; 48 entries at 114 queries; 96 entries at 127 queries)
@@ -49,8 +51,9 @@ private[graft] object Memo {
   }
 
   /** Listeners fired (inside the monitor) with the INTERNAL key
-    * (`sessionHash|callerKey`) whenever an entry leaves the memo by any
-    * path — capacity eviction, staleness release, or explicit release.
+    * ([[internalKey]]: `sessionUUID|callerKey`) whenever an entry leaves
+    * the memo by any path — capacity eviction, staleness release, or
+    * explicit release.
     * Lets driver-side caches paired with a memo entry (e.g. the IVF
     * centroid cache) drop their half in lockstep instead of leaking. */
   private val releaseListeners =
@@ -105,8 +108,15 @@ private[graft] object Memo {
     n
   }
 
+  /** The internal key [[cached]] stores `key` under for session `s`.
+    * Driver-side caches paired with a memo entry key by this too, so
+    * the [[onRelease]] hook can drop both halves together. A UUID holds
+    * no `|`, so listeners recover `key` after the first `|`. */
+  def internalKey(s: SparkSession, key: String): String =
+    s"${org.apache.spark.sql.SessionIds.uuid(s)}|$key"
+
   def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = s"${System.identityHashCode(s)}|$key"
+    val k = internalKey(s, key)
     memo.synchronized {
       val hit = memo.get(k)
       if (hit != null) {

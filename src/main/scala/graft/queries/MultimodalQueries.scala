@@ -520,157 +520,6 @@ object MultimodalQueries {
              |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
              |FROM m ORDER BY id, frame""".stripMargin)),
 
-    // MPEG-1 INTRA pixel decode (round 12, VERDICT r11 #7): the
-    // predictive-codec fence narrowed — a real pure-JVM MPEG-1
-    // I-frame decoder (headers, DC/AC VLCs, intra dequant, IDCT;
-    // ext/Mpeg1.scala) runs behind the SAME dispatch as images and
-    // MJPEG. The fixture re-uses the MJPEG quadrant formula through
-    // the new codec (DC-only blocks are exact through dequant+IDCT:
-    // pixel = DC/8), so the SAME closed-form oracle covers it. The
-    // `decoded` column pins the dispatch: TRUE = real pixels, the
-    // fence flag consumers filter on.
-    Q("multimodal_mpeg1_decode",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        val media = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id =>
-            Multimodal.MediaRow(id, Multimodal.syntheticMpeg1Mp4(id))))
-        Multimodal.extractFeatures(media).toDF()
-          .select(col("id"),
-            col("width").cast("long").as("width"),
-            col("height").cast("long").as("height"),
-            round(element_at(col("feature"), 1), 6).as("mean_gray"),
-            round(element_at(col("feature"), 2), 6).as("std_gray"),
-            col("decoded"))
-          .orderBy("id")
-      },
-      Some("""WITH g AS (SELECT doc_id,
-             |    (doc_id*31 + 11) % 256 AS g0, (doc_id*37 + 16) % 256 AS g1,
-             |    (doc_id*43 + 21) % 256 AS g2, (doc_id*49 + 26) % 256 AS g3
-             |  FROM documents),
-             |m AS (SELECT doc_id,
-             |    CAST(64*(g0+g1+g2+g3) AS DOUBLE)/256 AS mean_g,
-             |    CAST(64*(g0*g0+g1*g1+g2*g2+g3*g3) AS DOUBLE)/256 AS meansq_g
-             |  FROM g)
-             |SELECT doc_id AS id, CAST(16 AS BIGINT) AS width,
-             |  CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray,
-             |  true AS decoded
-             |FROM m ORDER BY id""".stripMargin)),
-
-    // Bounded multi-keyframe MPEG-1 walk — the mjpeg_multiframe twin
-    // through the new decoder: same per-frame quadrant advance, same
-    // analytic oracle, one decoder swap.
-    Q("multimodal_mpeg1_frames",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val mp4 = Multimodal.syntheticMpeg1Mp4(id, 3 + (id % 2).toInt)
-            Multimodal.decodeMpeg1Frames(mp4, 8).map { case (f, w, h, m, sd) =>
-              (id, f.toLong, w.toLong, h.toLong, m, sd)
-            }
-          })
-          .toDF("id", "frame", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH fr AS (SELECT doc_id, f FROM documents,
-             |    LATERAL (SELECT unnest(range(3 + doc_id % 2)) AS f) u),
-             |g AS (SELECT doc_id, f,
-             |    (doc_id*31 + 11 + 29*f) % 256 AS g0,
-             |    (doc_id*37 + 16 + 29*f) % 256 AS g1,
-             |    (doc_id*43 + 21 + 29*f) % 256 AS g2,
-             |    (doc_id*49 + 26 + 29*f) % 256 AS g3
-             |  FROM fr),
-             |m AS (SELECT doc_id, f,
-             |    CAST(64*(g0+g1+g2+g3) AS DOUBLE)/256 AS mean_g,
-             |    CAST(64*(g0*g0+g1*g1+g2*g2+g3*g3) AS DOUBLE)/256 AS meansq_g
-             |  FROM g)
-             |SELECT doc_id AS id, CAST(f + 1 AS BIGINT) AS frame,
-             |  CAST(16 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
-
-    // MPEG-1 INTER pixel decode (round 12b): P-pictures with real
-    // forward motion compensation — skipped-MB copy, zero-MV coded
-    // residuals (non-intra dequant), true ±8 px motion — and
-    // B-pictures (forward/backward/interpolated MC against both
-    // anchors), decoded pure-JVM (ext/Mpeg1.scala decodeFramesLuma).
-    // The fixture is an I → P(residual) → P(motion mix) → B(all four
-    // bidirectional modes) elementary stream whose every frame mean
-    // is a closed k/16 form of doc_id; the frame_type column pins
-    // that frames 2-4 really took the inter paths.
-    Q("multimodal_mpeg1_motion",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val es = Multimodal.syntheticMpeg1MotionEs(id)
-            Multimodal.decodeMpeg1FramesTyped(es, 8).map {
-              case (f, t, w, h, m, _) =>
-                (id, f.toLong, t.toString, w.toLong, h.toLong, m)
-            }
-          })
-          .toDF("id", "frame", "frame_type", "width", "height", "m")
-          .select(col("id"), col("frame"), col("frame_type"),
-            col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH b AS (SELECT doc_id, mb, bb,
-             |    ((doc_id*7 + mb*16 + bb*4 + 50) % 200 + 10) AS g
-             |  FROM documents,
-             |    LATERAL (SELECT unnest(range(4)) AS mb) u,
-             |    LATERAL (SELECT unnest(range(4)) AS bb) v),
-             |agg AS (SELECT doc_id,
-             |    sum(g)/16.0 AS mean_i,
-             |    sum(CASE WHEN mb=0 THEN g END)/4.0 AS r00,
-             |    sum(CASE WHEN (mb=0 AND bb IN (1,3))
-             |             OR (mb=1 AND bb IN (0,2)) THEN g END)/4.0 AS r10,
-             |    sum(CASE WHEN (mb=0 AND bb IN (2,3))
-             |             OR (mb=2 AND bb IN (0,1)) THEN g END)/4.0 AS r01,
-             |    sum(CASE WHEN mb=3 THEN g END)/4.0 AS r11,
-             |    -- B frame MB2 is the rounded per-quadrant average of
-             |    -- P1's MB2 (blocks g(2,b)+d) against P2's MB2 (P1
-             |    -- shifted up 8 px: g(0,2), g(0,3), g(2,0), g(2,1), +d)
-             |    max(CASE WHEN mb=2 AND bb=0 THEN g END) AS g20,
-             |    max(CASE WHEN mb=2 AND bb=1 THEN g END) AS g21,
-             |    max(CASE WHEN mb=2 AND bb=2 THEN g END) AS g22,
-             |    max(CASE WHEN mb=2 AND bb=3 THEN g END) AS g23,
-             |    max(CASE WHEN mb=0 AND bb=2 THEN g END) AS g02,
-             |    max(CASE WHEN mb=0 AND bb=3 THEN g END) AS g03
-             |  FROM b GROUP BY doc_id),
-             |f AS (SELECT doc_id, 2*(doc_id % 5 + 1) + 1 AS d, agg.*
-             |  FROM agg),
-             |fr AS (
-             |  SELECT doc_id, 1 AS frame, 'I' AS ftype, mean_i AS mean FROM f
-             |  UNION ALL
-             |  SELECT doc_id, 2, 'P', mean_i + d FROM f
-             |  UNION ALL
-             |  SELECT doc_id, 3, 'P',
-             |    (r00 + r10 + r01 + r11)/4.0 + d + d/4.0 FROM f
-             |  UNION ALL
-             |  SELECT doc_id, 4, 'B',
-             |    ( (r00 + d)                           -- MB0: fwd <- P1
-             |    + (r10 + d)                           -- MB1: bwd <- P2
-             |    + ( (g20 + g02 + 2*d + 1)//2          -- MB2: Bi rounded
-             |      + (g21 + g03 + 2*d + 1)//2          --      quadrants
-             |      + (g22 + g20 + 2*d + 1)//2
-             |      + (g23 + g21 + 2*d + 1)//2 )/4.0
-             |    + (r11 + 2*d)                         -- MB3: fwd + resid
-             |    )/4.0 FROM f)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame,
-             |  ftype AS frame_type, CAST(32 AS BIGINT) AS width,
-             |  CAST(32 AS BIGINT) AS height, round(mean, 6) AS mean_gray
-             |FROM fr ORDER BY id, frame""".stripMargin)),
-
     // H.264 INTER pixel decode (round 12b): P slices with real
     // quarter-pel list-0 motion compensation — P_L0_16x16, P_Skip,
     // intra refresh — decoded pure-JVM (ext/H264.scala
@@ -919,9 +768,9 @@ object MultimodalQueries {
     // the MODERN-codec fence narrowed): the fixture is a REAL avc1
     // track — avcC record (SPS/PPS), 4-byte length-prefixed IDR NAL
     // samples — whose I_PCM macroblocks carry the same quadrant
-    // pattern as the MJPEG/MPEG-1 fixtures, decoded by the pure-JVM
+    // pattern as the MJPEG fixtures, decoded by the pure-JVM
     // ext/H264 decoder behind the same dispatch. One closed-form
-    // oracle now covers THREE codecs end-to-end.
+    // oracle covers both codecs end-to-end.
     Q("multimodal_avc_decode",
       (s, dir) => {
         val spark = s
@@ -953,9 +802,9 @@ object MultimodalQueries {
              |  true AS decoded
              |FROM m ORDER BY id""".stripMargin)),
 
-    // Bounded multi-keyframe avc1 walk — the mjpeg/mpeg1 multiframe
-    // twin through the H.264 decoder: same per-frame quadrant
-    // advance, same analytic oracle, third codec swap.
+    // Bounded multi-keyframe avc1 walk — the mjpeg multiframe twin
+    // through the H.264 decoder: same per-frame quadrant advance,
+    // same analytic oracle, one decoder swap.
     Q("multimodal_avc_frames",
       (s, dir) => {
         val spark = s
@@ -1083,304 +932,6 @@ object MultimodalQueries {
              |  round(mean_g, 6) AS mean_gray,
              |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
              |FROM m ORDER BY id""".stripMargin)),
-
-    // HEVC intra decode under the oracle gate (round 14; EXTENDED
-    // round 15 with the residual + angular paths, VERDICT r14 #3/#5):
-    // one 16-px CTU quadtree-split into four 8x8 CUs — two I_PCM flat
-    // quadrants, one VERTICAL (mode 26) CU copying q0's bottom row
-    // (its left refs substitute to the same flat value, so the
-    // boundary filter is a no-op), and one DC CU carrying a CODED
-    // DC coefficient c: prediction dc = (q0 + q1 + 1) // 2 over the
-    // flat refs (left = the mode-26 quadrant = q0, top = q1), the
-    // 8.4.4.2.5 boundary smoothing, then +2c per sample (8x8 dequant
-    // at qp 28 + the two DCT stages are exactly 2c for these
-    // magnitudes). The slice is CABAC-coded through the shared 9.3
-    // engine including the residual chain (last position, sig map,
-    // greater1/2, sign, remaining), so a single bin decoded
-    // differently breaks the hash. DuckDB replays the 256-pixel
-    // distribution analytically.
-    Q("multimodal_hevc_decode",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            def q(k: Int): Int = ((id * 11 + 4 * k + 60) % 180).toInt + 20
-            val c0 = (id % 9).toInt - 4
-            val c = if (c0 == 0) 5 else c0
-            // round 16: chroma DCs ride the same coded CU — PCM CUs
-            // carry flat (q0, q1) chroma so the DM-DC prediction of
-            // CU3's chroma is closed-form like its luma
-            val cbc = (id % 7).toInt - 3
-            val crc = ((id / 2) % 7).toInt - 3
-            val es = graft.ext.Hevc.encodeIFrame(1, 1, _ =>
-              graft.ext.Hevc.Quad(Seq(
-                graft.ext.Hevc.HPcm((_, _) => q(0),
-                  (_, _) => q(0), (_, _) => q(1)),
-                graft.ext.Hevc.HPcm((_, _) => q(1),
-                  (_, _) => q(1), (_, _) => q(0)),
-                graft.ext.Hevc.HIntra(26),
-                graft.ext.Hevc.HIntraCoded(1, Seq((0, c)),
-                  cbDc = cbc, crDc = crc))))
-            val (w, h, luma, cbP, crP) = graft.ext.Hevc
-              .decodeFramesYuv(es, 1).headOption
-              .getOrElse((0, 0, Array.empty[Int], Array.empty[Int],
-                Array.empty[Int]))
-            def stats(p: Array[Int]): (Double, Double) = {
-              var sum = 0.0
-              var sq = 0.0
-              p.foreach { v => sum += v; sq += v.toDouble * v }
-              val n = math.max(1, p.length)
-              val mean = sum / n
-              (mean, math.sqrt(math.max(0.0, sq / n - mean * mean)))
-            }
-            val (my, sy) = stats(luma)
-            val (mu, su) = stats(cbP)
-            val (mvv, sv) = stats(crP)
-            (id, w.toLong, h.toLong, my, sy, mu, su, mvv, sv)
-          })
-          .toDF("id", "width", "height", "m", "sd", "mu", "su", "mv", "sv")
-          .select(col("id"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"), round(col("sd"), 6).as("std_gray"),
-            round(col("mu"), 6).as("mean_u"), round(col("su"), 6).as("std_u"),
-            round(col("mv"), 6).as("mean_v"), round(col("sv"), 6).as("std_v"))
-          .orderBy("id")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*11 + 60) % 180 + 20 AS q0,
-             |    (doc_id*11 + 64) % 180 + 20 AS q1,
-             |    CASE WHEN doc_id % 9 = 4 THEN 5
-             |         ELSE doc_id % 9 - 4 END AS c,
-             |    (doc_id % 7) - 3 AS cbc,
-             |    ((doc_id // 2) % 7) - 3 AS crc
-             |  FROM documents),
-             |d AS (SELECT doc_id, q0, q1, c, cbc, crc,
-             |    (q0 + q1 + 1) // 2 AS dc FROM p),
-             |cells(doc_id, cnt, v) AS (
-             |  SELECT doc_id, 64, q0 FROM d
-             |  UNION ALL SELECT doc_id, 64, q1 FROM d
-             |  UNION ALL SELECT doc_id, 64, q0 FROM d
-             |  UNION ALL SELECT doc_id, 1,
-             |    (q0 + 2*dc + q1 + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 7, (q1 + 3*dc + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 7, (q0 + 3*dc + 2) // 4 + 2*c FROM d
-             |  UNION ALL SELECT doc_id, 49, dc + 2*c FROM d),
-             |m AS (SELECT doc_id,
-             |    CAST(sum(cnt*v) AS DOUBLE)/256 AS mean_g,
-             |    CAST(sum(cnt*v*v) AS DOUBLE)/256 AS meansq_g
-             |  FROM cells GROUP BY doc_id),
-             |ccells(doc_id, comp, cnt, v) AS (
-             |  -- chroma 8x8: PCM quadrants flat; CU2 (DM vertical)
-             |  -- copies CU0's bottom row; CU3 (DM DC) averages CU2's
-             |  -- right column and CU1's bottom row (no smoothing for
-             |  -- chroma) + the 4c dequant chain at QPc(28) = 28
-             |  SELECT doc_id, 'u', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'u', 16,
-             |    (4*q0 + 4*q1 + 4) // 8 + 4*cbc FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q0 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16, q1 FROM d
-             |  UNION ALL SELECT doc_id, 'v', 16,
-             |    (4*q1 + 4*q0 + 4) // 8 + 4*crc FROM d),
-             |cm AS (SELECT doc_id,
-             |    CAST(sum(CASE WHEN comp = 'u' THEN cnt*v END) AS DOUBLE)/64 AS mean_u,
-             |    CAST(sum(CASE WHEN comp = 'u' THEN cnt*v*v END) AS DOUBLE)/64 AS msq_u,
-             |    CAST(sum(CASE WHEN comp = 'v' THEN cnt*v END) AS DOUBLE)/64 AS mean_v,
-             |    CAST(sum(CASE WHEN comp = 'v' THEN cnt*v*v END) AS DOUBLE)/64 AS msq_v
-             |  FROM ccells GROUP BY doc_id)
-             |SELECT m.doc_id AS id, CAST(16 AS BIGINT) AS width,
-             |  CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray,
-             |  round(mean_u, 6) AS mean_u,
-             |  round(sqrt(msq_u - mean_u*mean_u), 6) AS std_u,
-             |  round(mean_v, 6) AS mean_v,
-             |  round(sqrt(msq_v - mean_v*mean_v), 6) AS std_v
-             |FROM m JOIN cm ON cm.doc_id = m.doc_id ORDER BY id""".stripMargin)),
-
-    // HEVC in-loop DEBLOCKING + SAO under the oracle gate (round 16,
-    // VERDICT r15 #4): a 32x16 two-CTU picture with a flat step of
-    // d = 1..5 across the CU edge, decoded three ways — no filter,
-    // deblock, and deblock + a band-offset SAO window at a's band
-    // (the luma samples still in that band after deblocking shift
-    // by +2, replayed generically in SQL by the band test). At qp 28 (beta 18, tc 2) d <= 4 takes the
-    // STRONG branch (3 samples a side, hand formulas), d = 5 the
-    // WEAK branch (delta clip 2, dEp1/dEq1 side taps); chroma rides
-    // the 16-grid edge with the p0/q0-only filter. DuckDB replays
-    // every branch in closed form over the per-column value counts.
-    Q("multimodal_hevc_deblock",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val a = ((id * 7) % 160).toInt + 40
-            val d = (id % 5).toInt + 1
-            val b = a + d
-            def mk(deblock: Boolean) = graft.ext.Hevc.encodeIFrame(2, 1, {
-              case 0 => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => a, (_, _) => a, (_, _) => a))
-              case _ => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => b, (_, _) => b, (_, _) => b))
-            }, deblock = deblock)
-            // 'sao' = deblock + a one-band +2 window at a's band
-            // (8.7.3 over the deblocked picture)
-            def mkSao = graft.ext.Hevc.encodeIFrame(2, 1, {
-              case 0 => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => a, (_, _) => a, (_, _) => a))
-              case _ => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => b, (_, _) => b, (_, _) => b))
-            }, deblock = true,
-              sao = Some(graft.ext.Hevc.HSaoBand(Seq(2, 0, 0, 0), a >> 3)))
-            Seq(("off", mk(false)), ("on", mk(true)),
-              ("sao", mkSao)).map { case (vn, es) =>
-              val (w, h, luma, cbP, crP) =
-                graft.ext.Hevc.decodeFramesYuv(es, 1).head
-              def stats(p: Array[Int]): (Double, Double) = {
-                var sum = 0.0; var sq = 0.0
-                p.foreach { v => sum += v; sq += v.toDouble * v }
-                val n = math.max(1, p.length)
-                val mean = sum / n
-                (mean, math.sqrt(math.max(0.0, sq / n - mean * mean)))
-              }
-              val (my, sy) = stats(luma)
-              val (mu, _) = stats(cbP)
-              val (mvv, _) = stats(crP)
-              (id, vn, w.toLong, h.toLong, my, sy, mu, mvv)
-            }
-          })
-          .toDF("id", "filter", "width", "height", "m", "sd", "mu", "mv")
-          .select(col("id"), col("filter"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"),
-            round(col("sd"), 6).as("std_gray"),
-            round(col("mu"), 6).as("mean_u"),
-            round(col("mv"), 6).as("mean_v"))
-          .orderBy("id", "filter")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*7) % 160 + 40 AS a,
-             |    (doc_id % 5) + 1 AS d
-             |  FROM documents),
-             |-- per-row luma column values after the filter: 13x a,
-             |-- then (p2', p1', p0', q0', q1', q2'), then 13x b
-             |f AS (SELECT doc_id, a, d, a + d AS b,
-             |    CASE WHEN d <= 4 THEN (7*a + (a+d) + 4) // 8 ELSE a END AS p2f,
-             |    CASE WHEN d <= 4 THEN (3*a + (a+d) + 2) // 4
-             |         ELSE a + 1 END AS p1f,
-             |    CASE WHEN d <= 4 THEN (5*a + 3*(a+d) + 4) // 8
-             |         ELSE a + 2 END AS p0f,
-             |    CASE WHEN d <= 4 THEN (5*(a+d) + 3*a + 4) // 8
-             |         ELSE a + d - 2 END AS q0f,
-             |    CASE WHEN d <= 4 THEN (3*(a+d) + a + 2) // 4
-             |         ELSE a + d - 1 END AS q1f,
-             |    CASE WHEN d <= 4 THEN (7*(a+d) + a + 4) // 8
-             |         ELSE a + d END AS q2f,
-             |    -- chroma: delta = clip2(((d<<2) + 4) // 8)
-             |    least(2, (4*d + 4) // 8) AS dc
-             |  FROM p),
-             |onc(doc_id, a, cnt, v) AS (
-             |  SELECT doc_id, a, 13, a FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p2f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p1f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, p0f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q0f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q1f FROM f
-             |  UNION ALL SELECT doc_id, a, 1, q2f FROM f
-             |  UNION ALL SELECT doc_id, a, 13, b FROM f),
-             |cells(doc_id, filter, cnt, v) AS (
-             |  SELECT doc_id, 'off', 16, a FROM f
-             |  UNION ALL SELECT doc_id, 'off', 16, b FROM f
-             |  UNION ALL SELECT doc_id, 'on', cnt, v FROM onc
-             |  UNION ALL SELECT doc_id, 'sao', cnt,
-             |    v + CASE WHEN v // 8 = a // 8 THEN 2 ELSE 0 END
-             |    FROM onc),
-             |m AS (SELECT doc_id, filter,
-             |    CAST(sum(cnt*v) AS DOUBLE)/32 AS mean_g,
-             |    CAST(sum(cnt*v*v) AS DOUBLE)/32 AS meansq_g
-             |  FROM cells GROUP BY doc_id, filter),
-             |cm AS (SELECT doc_id, 'off' AS filter,
-             |    (a + 0.0 + a + d)/2 AS mean_c FROM f
-             |  UNION ALL SELECT doc_id, 'on',
-             |    CAST(7*a + (a + dc) + ((a+d) - dc) + 7*(a+d)
-             |      AS DOUBLE)/16 FROM f
-             |  UNION ALL SELECT doc_id, 'sao', -- luma-only SAO
-             |    CAST(7*a + (a + dc) + ((a+d) - dc) + 7*(a+d)
-             |      AS DOUBLE)/16 FROM f)
-             |SELECT m.doc_id AS id, m.filter AS filter,
-             |  CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray,
-             |  round(mean_c, 6) AS mean_u, round(mean_c, 6) AS mean_v
-             |FROM m JOIN cm ON cm.doc_id = m.doc_id
-             |  AND cm.filter = m.filter
-             |ORDER BY id, m.filter""".stripMargin)),
-
-    // HEVC P-SLICE decode under the oracle gate (round 16, VERDICT
-    // r15 #7): a 32x16 two-CTU I picture (flat PCM a | b) followed by
-    // two P slices over slice-header RPS references — P1: an explicit
-    // zero-MV CU with a 16x16-DC residual (+c1 at qp 28) beside a
-    // merge-skip CU (A1 inherits the zero motion -> copy); P2: a skip
-    // CU (copy of P1) beside an integer-MV +2-sample CU with +c2 on
-    // flat content (the shift is invisible on a flat quadrant, the
-    // residual is not). DuckDB replays all three frames closed-form;
-    // one wrong merge candidate, mvd bin, MC tap or dequant anywhere
-    // shifts a quadrant and breaks the hash.
-    Q("multimodal_hevc_inter",
-      (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.flatMap { id =>
-            val a = ((id * 7) % 170).toInt + 30
-            val b = ((id * 13) % 170).toInt + 30
-            val c1 = (id % 9).toInt - 4
-            val c2 = ((id / 3) % 9).toInt - 4
-            val es = graft.ext.Hevc.encodeIPStream(2, 1,
-              i => graft.ext.Hevc.Leaf(graft.ext.Hevc.HPcm(
-                (_, _) => if (i == 0) a else b)),
-              Seq(
-                i => if (i == 0) graft.ext.Hevc.HPMv(0, 0, dc = c1)
-                else graft.ext.Hevc.HPSkip(0),
-                i => if (i == 0) graft.ext.Hevc.HPSkip(0)
-                else graft.ext.Hevc.HPMv(8, 0, dc = c2)))
-            graft.ext.Hevc.decodeFramesYuv(es, 4).zipWithIndex.map {
-              case ((w, h, luma, _, _), fi) =>
-                var sum = 0.0
-                var sq = 0.0
-                luma.foreach { v => sum += v; sq += v.toDouble * v }
-                val n = math.max(1, luma.length)
-                val mean = sum / n
-                (id, (fi + 1).toLong, w.toLong, h.toLong, mean,
-                  math.sqrt(math.max(0.0, sq / n - mean * mean)))
-            }
-          })
-          .toDF("id", "frame", "width", "height", "m", "sd")
-          .select(col("id"), col("frame"), col("width"), col("height"),
-            round(col("m"), 6).as("mean_gray"),
-            round(col("sd"), 6).as("std_gray"))
-          .orderBy("id", "frame")
-      },
-      Some("""WITH p AS (SELECT doc_id,
-             |    (doc_id*7) % 170 + 30 AS a,
-             |    (doc_id*13) % 170 + 30 AS b,
-             |    (doc_id % 9) - 4 AS c1,
-             |    ((doc_id // 3) % 9) - 4 AS c2
-             |  FROM documents),
-             |v(doc_id, frame, va, vb) AS (
-             |  SELECT doc_id, 1, a, b FROM p
-             |  UNION ALL SELECT doc_id, 2, a + c1, b FROM p
-             |  UNION ALL SELECT doc_id, 3, a + c1, b + c2 FROM p),
-             |m AS (SELECT doc_id, frame,
-             |    (va + vb) / 2.0 AS mean_g,
-             |    CAST(va*va + vb*vb AS DOUBLE) / 2.0 AS meansq_g
-             |  FROM v)
-             |SELECT doc_id AS id, CAST(frame AS BIGINT) AS frame,
-             |  CAST(32 AS BIGINT) AS width, CAST(16 AS BIGINT) AS height,
-             |  round(mean_g, 6) AS mean_gray,
-             |  round(sqrt(meansq_g - mean_g*mean_g), 6) AS std_gray
-             |FROM m ORDER BY id, frame""".stripMargin)),
 
     // H.264 CHROMA reconstruction under the oracle gate (round 14,
     // VERDICT r13 #3): a 2x1 picture — MB0 = I16Dc(z0, chroma DC +1

@@ -99,10 +99,9 @@ class GoldenSpec extends SparkSpec {
       "ml_ae_embedding" -> "900a7d3cc95767a39e4368cf37f80d50",
       "ml_ae_history" -> "bd03f333375ae330d3ec732544a35844",
       "ml_umap_embedding" -> "7680087c3201c84a6120bf23492e140c",
-      // the round-12b video INTER paths: I/P(/B) chains whose frame
+      // the round-12b video INTER path: an I/P chain whose frame
       // means are closed forms of doc_id — a decoder regression
-      // (motion tables, MC rounding, reference chaining) flips these
-      "multimodal_mpeg1_motion" -> "f287b30da3c5f7ac1c40743bd67d895f",
+      // (motion tables, MC rounding, reference chaining) flips this
       "multimodal_avc_motion" -> "70aee07fc3736c9c96a67ff0b5832593",
       "ml_dtw_stretch" -> "9c043300d16d1d8eef4193a9d8427a46",
       "sim_ivf_topk" -> "ea250d44e0e96b7b782ebd2135c04495",

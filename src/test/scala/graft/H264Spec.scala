@@ -175,8 +175,11 @@ class H264Spec extends AnyFunSuite {
     val es = H264.encodeIFrame(1, 1, _ => Pcm((x, y) => (x * y) % 256))
     assert(H264.decodeIFrameLuma(es.take(es.length - 20)).isEmpty, "truncated")
     assert(H264.decodeIFrameLuma(Array.fill[Byte](64)(0x42)).isEmpty, "garbage")
-    assert(H264.decodeIFrameLuma(
-      graft.ext.Mpeg1.encodeIFrame(1, 1, (_, _) => 99)).isEmpty, "mpeg1 stream")
+    // an MPEG-1 elementary stream: sequence header, picture and slice
+    // start codes, one flat 16x16 intra macroblock
+    val mpeg1 = "000001b301001011ffffe00000000100000ffff80000010143e152948880"
+      .grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    assert(H264.decodeIFrameLuma(mpeg1).isEmpty, "mpeg1 stream")
     // slice without its parameter sets
     val idrOnly = Array[Byte](0, 0, 0, 1) ++ H264.idrNal(1, 1, _ => I16Dc(1), 28)
     assert(H264.decodeIFrameLuma(idrOnly).isEmpty, "no sps/pps")

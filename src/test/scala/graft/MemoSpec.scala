@@ -76,6 +76,21 @@ class MemoSpec extends SparkSpec {
     (1 to 30).foreach(_ => Memo.advance()); Memo.releaseStale(24)
   }
 
+  test("a new session builds its own entry: keys never alias across sessions") {
+    import spark.implicits._
+    val key = "memospec|session"
+    val first = Memo.cached(spark, key)(Seq(1L).toDF("id"))
+    val other = spark.newSession()
+    var built = false
+    val second = Memo.cached(other, key) { built = true; other.range(2).toDF() }
+    assert(built, "a new session must run its build, not reuse another session's frame")
+    assert(second ne first)
+    assert(second.sparkSession eq other)
+    // cleanup: both sessions' entries, addressed by their internal keys
+    assert(Memo.release(Set(Memo.internalKey(spark, key),
+      Memo.internalKey(other, key))) == 2)
+  }
+
   test("releaseStale survives a lastTouch-less entry (treated as stale, no NPE)") {
     // the invariant is maintained by cached(); this pins the DEFENSIVE
     // behavior: an untracked entry must be released, not NPE mid-suite

@@ -224,40 +224,6 @@ class MultimodalSourcesSpec extends SparkSpec {
     assert(Multimodal.decodeMjpegFirstFrame("not mp4".getBytes("UTF-8")).isEmpty)
   }
 
-  test("MPEG-1 motion fixture: I/P/P chain decodes to the closed-form " +
-      "means the DuckDB oracle computes (inter paths end-to-end)") {
-    for (id <- Seq(0L, 1L, 7L, 63L, 254L)) {
-      def g(mb: Int, b: Int): Double =
-        ((id * 7 + mb * 16 + b * 4 + 50) % 200 + 10).toDouble
-      val delta = (2 * (id % 5 + 1) + 1).toDouble
-      val meanI = (for (mb <- 0 to 3; b <- 0 to 3) yield g(mb, b)).sum / 16
-      val r00 = (0 to 3).map(g(0, _)).sum / 4
-      val r10 = (g(0, 1) + g(0, 3) + g(1, 0) + g(1, 2)) / 4
-      val r01 = (g(0, 2) + g(0, 3) + g(2, 0) + g(2, 1)) / 4
-      val r11 = (0 to 3).map(g(3, _)).sum / 4
-      val mean2 = (r00 + r10 + r01 + r11) / 4 + delta + delta / 4
-      // frame 4 (B): fwd<-P1 MB0, bwd<-P2 MB1, Bi-rounded MB2 quadrants
-      // (P1's g(2,b)+d against P2's shifted g(0,2)/g(0,3)/g(2,0)/g(2,1)+d),
-      // fwd+residual MB3
-      def biQ(a: Double, b: Double): Double =
-        ((a + b + 2 * delta + 1) / 2).floor
-      val meanB = ((r00 + delta) + (r10 + delta) +
-        (biQ(g(2, 0), g(0, 2)) + biQ(g(2, 1), g(0, 3)) +
-          biQ(g(2, 2), g(2, 0)) + biQ(g(2, 3), g(2, 1))) / 4 +
-        (r11 + 2 * delta)) / 4
-      val es = Multimodal.syntheticMpeg1MotionEs(id)
-      val fs = Multimodal.decodeMpeg1FramesTyped(es, 8)
-      assert(fs.map(f => (f._1, f._2, f._3, f._4)) ==
-        Seq((1, 'I', 32, 32), (2, 'P', 32, 32), (3, 'P', 32, 32),
-          (4, 'B', 32, 32)),
-        s"id $id shape: $fs")
-      assert(fs(0)._5 == meanI, s"id $id frame 1: ${fs(0)._5} want $meanI")
-      assert(fs(1)._5 == meanI + delta, s"id $id frame 2: ${fs(1)._5}")
-      assert(fs(2)._5 == mean2, s"id $id frame 3: ${fs(2)._5} want $mean2")
-      assert(fs(3)._5 == meanB, s"id $id frame 4: ${fs(3)._5} want $meanB")
-    }
-  }
-
   test("H.264 motion fixture: I/P/P chain decodes to the closed-form " +
       "means the DuckDB oracle computes (inter + edge-clamp paths)") {
     for (id <- Seq(0L, 3L, 44L, 178L, 255L)) {
@@ -706,31 +672,6 @@ class MultimodalSourcesSpec extends SparkSpec {
     val row = df.collect().head
     assert(row.getString(0) == "东京") // no phonetic-run leakage
     assert(row.getDouble(1) == 3.5)   // and from the right sheet
-  }
-
-  test("hev1-in-MP4 route (round 14): hvcC parameter sets + length-" +
-      "prefixed samples reach the HEVC starter decoder; dispatch " +
-      "flags real pixels") {
-    import graft.ext.Multimodal
-    for (id <- Seq(2L, 9L)) {
-      def g(q: Int, f: Int): Int =
-        ((id * (31 + 6 * q) + 11 + 5 * q + 29L * f) % 256).toInt
-      val mp4 = Multimodal.syntheticHevcMp4(id, nFrames = 2)
-      val fs = Multimodal.decodeHevcFrames(mp4, 4)
-      assert(fs.length == 2, s"id=$id got ${fs.length} frames")
-      for ((f0, k) <- fs.zipWithIndex) {
-        val vals = (0 until 4).map(q => g(q, k).toDouble)
-        val mean = vals.sum / 4
-        val std = math.sqrt(vals.map(v => v * v).sum / 4 - mean * mean)
-        assert(f0._2 == 16 && f0._3 == 16, s"id=$id f$k dims")
-        assert(math.abs(f0._4 - mean) < 1e-9, s"id=$id f$k mean")
-        assert(math.abs(f0._5 - std) < 1e-9, s"id=$id f$k std")
-      }
-      val d = Multimodal.decode(mp4)
-      assert(d._4, s"id=$id dispatch must flag decoded=true")
-      // metadata-only containers (no samples, no hvcC) keep degrading
-      assert(!Multimodal.decode(Multimodal.syntheticMp4(id))._4)
-    }
   }
 
   // ---- hand-built BIFF8 .xls fixture (MS-CFB + MS-XLS layouts) ----
