@@ -515,8 +515,8 @@ object Similarity {
     // the candidate pool feeds three DAG branches (the collapse, both
     // sides of the pairwise join) — Memo'd so the |Q|·n candidate scan
     // runs once, not once per branch; the cached frame is |Q|·pool rows
-    val cand = graft.queries.Memo.cached(spark, s"mmrcand|" +
-      s"${System.identityHashCode(spark)}|$idCol|$vecCol|$queryPred|$pool|" +
+    val cand = graft.queries.Memo.cached(spark,
+      s"mmrcand|$idCol|$vecCol|$queryPred|$pool|" +
       s"${emb.queryExecution.logical.semanticHash()}")(
       bruteForceTopK(emb, idCol, vecCol, queryPred, pool)
         .select(col("q_id"), col("n_id"), col("cosine").as("rel")))
@@ -670,8 +670,7 @@ object Similarity {
     // it into the post-join cosine and re-evaluates it once PER QUERY
     // per row — measured 10× (=|Q|) slower than brute force at a 200k
     // corpus in the round-10 stress before this barrier
-    val e = graft.queries.Memo.cached(spark, s"int8codes|" +
-        s"${System.identityHashCode(spark)}|$idCol|$vecCol|" +
+    val e = graft.queries.Memo.cached(spark, s"int8codes|$idCol|$vecCol|" +
         s"${emb.queryExecution.logical.semanticHash()}")(
       eq.drop("v").withColumnRenamed("__qv", "v")
         .withColumn("nrm", sqrt(call_function("array_dot", col("v"), col("v")))))
@@ -721,8 +720,8 @@ object Similarity {
     // sink scoring epochs against a FROZEN eval set pays the probe
     // once, not one extra Spark job per micro-batch. (Cache values are
     // single Longs; growth is bounded by distinct eval plans per JVM.)
-    val estKey = s"${System.identityHashCode(evalSet.sparkSession)}|$idCol|$vecCol|" +
-      s"${evalSet.queryExecution.logical.semanticHash()}"
+    val estKey = graft.queries.Memo.internalKey(evalSet.sparkSession,
+      s"evalsize|$idCol|$vecCol|${evalSet.queryExecution.logical.semanticHash()}")
     val estBytes = evalSizeCache.getOrElseUpdate(estKey, {
       val est = ev.agg(coalesce(sum(size(col("__ev"))), lit(0L)).as("e"),
         count(lit(1)).as("n")).head()
@@ -1088,8 +1087,7 @@ object Similarity {
     * stress. */
   private def cachedCodes(emb: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    graft.queries.Memo.cached(emb.sparkSession, s"signcodes|" +
-      s"${System.identityHashCode(emb.sparkSession)}|$idCol|$vecCol|" +
+    graft.queries.Memo.cached(emb.sparkSession, s"signcodes|$idCol|$vecCol|" +
       s"${emb.queryExecution.logical.semanticHash()}")(
       withSignCode(withDim(prep(emb, idCol, vecCol))))
 

@@ -1805,8 +1805,7 @@ object TextOps {
   /** The Memo'd (word, freq) table every vocabulary statistic shares —
     * one token pass per corpus per session, |vocab| rows (≪ corpus). */
   private def tokenFreq(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    graft.queries.Memo.cached(df.sparkSession, s"tokfreq|" +
-      s"${System.identityHashCode(df.sparkSession)}|$idCol|$textCol|" +
+    graft.queries.Memo.cached(df.sparkSession, s"tokfreq|$idCol|$textCol|" +
       s"${df.queryExecution.logical.semanticHash()}")(
       df.select(explode(tokensCol(col(textCol))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("f")))

@@ -3,8 +3,9 @@ package graft.ml
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.evaluation.ClusteringEvaluator
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** C1/C4/A5 clustering built-ins (reference: app.py:704-720, 790-808).
   *
@@ -24,25 +25,35 @@ object Clustering {
     * its result depends on partitioning even with a fixed seed);
     * larger inputs use the distributed MLlib fit.
     *
-    * No bare cache of the caller's plan: the gate is a column-pruned
-    * limited count (the repo's probe idiom — unpersisting a
-    * caller-visible plan can evict a cache entry the caller shares,
-    * since Spark's cache manager matches canonicalized plans). The
-    * distributed path caches only the DERIVED `__f` plan and releases
-    * it after an eager materialize, like Ivf.topK. */
+    * No bare cache of the caller's plan: the gate is one limited
+    * collect ([[Gate]] — unpersisting a caller-visible plan can evict
+    * a cache entry the caller shares, since Spark's cache manager
+    * matches canonicalized plans). Under the gate it collects every
+    * column of `emb`, and the output is built from those rows in the
+    * layout `emb.join(labels, "series_id")` has: `series_id`, the other
+    * columns, then `cluster` as a non-null int, so no second job reads
+    * `emb` again. At or above the gate the distributed path pays that
+    * one bounded collect, then caches only the DERIVED `__f` plan and
+    * releases it after an eager materialize, like Ivf.topK. */
   def kmeans(emb: DataFrame, k: Int, seed: Long = 10,
-      gate: Long = 100000L): DataFrame = {
+      gate: Long = Gate.DriverRows): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    if (gate > 0 && emb.limit(gate.toInt).count() < gate) {
-      val rows = emb
-        .select(col("series_id").cast("long"), col("x").cast("double"),
-          col("y").cast("double"))
-        .orderBy(col("series_id"))
-        .as[(Long, Double, Double)].collect()
-      val labels = Local.kmeans(rows.map(r => (r._2, r._3)), k, seed)
-      val labelDf = rows.map(_._1).zip(labels).toSeq.toDF("series_id", "cluster")
-      return emb.join(broadcast(labelDf), "series_id")
+    // (id, x, y) as the fit reads them, then emb's own columns
+    val keyed = emb.select(col("series_id").cast("long"),
+      col("x").cast("double"), col("y").cast("double"), col("*"))
+    Gate.rowsById(keyed, gate) match {
+      case Some(rows) =>
+        val labels = Local.kmeans(rows.map(r => (r.getDouble(1), r.getDouble(2))), k, seed)
+        val idAt = emb.schema.fieldIndex("series_id")
+        val others = emb.schema.indices.filter(_ != idAt)
+        val schema = StructType((emb.schema(idAt) +: others.map(i => emb.schema(i))) :+
+          StructField("cluster", IntegerType, nullable = false))
+        val out = rows.indices.map { i =>
+          val r = rows(i)
+          Row.fromSeq((r.get(3 + idAt) +: others.map(j => r.get(3 + j))) :+ labels(i))
+        }
+        return spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+      case None =>
     }
     // distributed: MLlib's iterative fit re-reads its input every
     // iteration — persist the derived plan, materialize the (small)
@@ -76,20 +87,20 @@ object Clustering {
   def silhouetteScan(emb: DataFrame, maxK: Int, keep: Int = 5): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    // gate probe, not a bare cache of the caller's plan (see kmeans)
-    val gate = 100000
-    val scores =
-      if (emb.limit(gate).count() < gate) {
-        // deterministic collect order: the seeded k-means++ init indexes
-        // into this array, so partitioning must not leak into results
-        val pts = emb.select(col("x").cast("double"), col("y").cast("double"))
-          .orderBy(col("series_id"))
-          .as[(Double, Double)].collect()
+    // one-collect gate, not a bare cache of the caller's plan (see kmeans)
+    val gated = Gate.localById(emb.select(col("series_id").cast("long"),
+        col("x").cast("double"), col("y").cast("double"))
+      .as[(java.lang.Long, Double, Double)], Gate.DriverRows)(_._1)
+    val scores = gated match {
+      case Some(rows) =>
+        // id order: the seeded k-means++ init indexes into this array,
+        // so partitioning must not leak into results
+        val pts = rows.map(r => (r._2, r._3))
         (2 to maxK).map { k =>
           val labels = Local.kmeans(pts, k, seed = 10)
           (k, math.rint(Local.silhouette(pts, labels, k) * 100 * 100) / 100)
         }
-      } else {
+      case None =>
         // derived-plan cache for the k fits, released once the scores
         // (plain doubles — already materialized) are in hand
         val f = withFeatures(emb).cache()
@@ -102,7 +113,7 @@ object Clustering {
         }
         f.unpersist()
         out
-      }
+    }
     scores.sortBy { case (k, s) => (-s, k) }.take(keep)
       .toDF("k", "silhouette_pct")
   }

@@ -36,20 +36,16 @@ object Dbscan {
     * are the contract, and the kernel does not replicate them. */
   def run(points: DataFrame, eps: Double, minPts: Int,
       maxDriverEdges: Long = 5000000L,
-      maxDriverPoints: Long = 100000L): DataFrame = {
-    if (maxDriverPoints > 0) {
-      val probe = math.min(maxDriverPoints, (Int.MaxValue - 8).toLong).toInt
-      val rows = points.select(col("series_id").cast("long"),
-          col("x").cast("double"), col("y").cast("double"))
-        .limit(probe + 1).collect()
-      if (rows.length <= probe &&
-          rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) &&
-          rows.iterator.map(_.getLong(0)).toSet.size == rows.length)
-        return runLocal(points.sparkSession, rows.map(r =>
-          (r.getLong(0), r.getDouble(1), r.getDouble(2))), eps, minPts)
+      maxDriverPoints: Long = Gate.DriverRows): DataFrame = {
+    Gate.rowsById(points.select(col("series_id").cast("long"),
+        col("x").cast("double"), col("y").cast("double")), maxDriverPoints,
+        inclusive = true)
+      .filter(_.forall(r => !r.isNullAt(1) && !r.isNullAt(2))) match {
+      case Some(rows) => runLocal(points.sparkSession, rows.map(r =>
+        (r.getLong(0), r.getDouble(1), r.getDouble(2))), eps, minPts)
+      case None => runFrom(neighborhood(points, eps, minPts), minPts,
+        maxDriverEdges, unpersistAfter = true)
     }
-    runFrom(neighborhood(points, eps, minPts), minPts, maxDriverEdges,
-      unpersistAfter = true)
   }
 
   /** The reference-regime kernel: every decision is the distributed

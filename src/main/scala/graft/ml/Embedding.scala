@@ -31,19 +31,15 @@ object Embedding {
   }
 
   /** Driver-local PCA for the reference regime: covariance from the
-    * id-sorted collected matrix + LAPACK eigSym — bitwise deterministic
-    * regardless of partitioning (MLlib's treeAggregate covariance and
-    * near-degenerate eigenpairs rotate between partitionings on tiny
-    * inputs, which flips downstream model selection). Sign rule:
-    * max-|·| loading positive. Returns (ids, scores, varRatio). */
-  private def pcaLocal(series: DataFrame, k: Int):
+    * id-sorted collected matrix ([[Gate.series]]) + LAPACK eigSym —
+    * bitwise deterministic regardless of partitioning (MLlib's
+    * treeAggregate covariance and near-degenerate eigenpairs rotate
+    * between partitionings on tiny inputs, which flips downstream model
+    * selection). Sign rule: max-|·| loading positive. Returns (ids,
+    * scores, varRatio). */
+  private def pcaLocal(data: Array[(Long, Array[Double])], k: Int):
       (Array[Long], Array[Array[Double]], Array[Double]) = {
     import breeze.linalg.{eigSym, DenseMatrix}
-    val spark = series.sparkSession
-    import spark.implicits._
-    val data = series.select(col("series_id").cast("long"), col("values"))
-      .orderBy(col("series_id"))
-      .as[(Long, Array[Double])].collect()
     val n = data.length
     require(n >= 2, s"PCA needs at least 2 series, got $n")
     val m = data.head._2.length
@@ -79,18 +75,20 @@ object Embedding {
     * distributed MLlib fit. `gate = 0` forces the distributed path
     * (the ml_dist_path_parity rig's lever, mirroring mds2d) —
     * production callers keep the default. */
-  def pcaEmbed(series: DataFrame, k: Int, gate: Long = 100000L): DataFrame = {
+  def pcaEmbed(series: DataFrame, k: Int, gate: Long = Gate.DriverRows): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited count — no cache()+unpersist() on the
-    // caller-visible plan (see mds2d). The distributed path's cache
-    // (input reused by the mean pass, the fit, and the transform) goes
-    // through the bounded Memo LRU so repeated large-input calls can't
-    // accumulate executor storage.
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    if (gate > 0 && series.limit(probe).count() < gate) {
-      val (ids, scores, _) = pcaLocal(series, k)
-      return ids.zip(scores).toSeq.toDF("series_id", "emb")
+    // one-collect gate ([[Gate]]): under it the collected rows are the
+    // fit's input. No cache()+unpersist() on the caller-visible plan
+    // (see mds2d). The distributed path's cache (input reused by the
+    // mean pass, the fit, and the transform) goes through the bounded
+    // Memo LRU so repeated large-input calls can't accumulate executor
+    // storage.
+    Gate.series(series, gate) match {
+      case Some(data) =>
+        val (ids, scores, _) = pcaLocal(data, k)
+        return ids.zip(scores).toSeq.toDF("series_id", "emb")
+      case None =>
     }
     val cached = graft.queries.Memo.cached(spark,
       s"pcaembed|${series.queryExecution.logical.semanticHash()}")(series)
@@ -160,24 +158,22 @@ object Embedding {
     * distances to the broadcast landmarks (de Silva & Tenenbaum 2004).
     * With numLandmarks ≥ n the landmark path reproduces the exact one
     * (parity-tested in ClusteringSpec). */
-  def mds2d(series: DataFrame, gate: Long = 100000L,
-      numLandmarks: Int = 1000): DataFrame = {
-    // gate probe via a limited count — no cache()+unpersist() on the
-    // caller-visible plan (that would evict a cache entry the caller
-    // may share; Spark's cache manager matches by plan, not reference)
-    val probe = math.min(gate, Int.MaxValue.toLong).toInt
-    val below = gate > 0 && series.limit(probe).count() < gate
-    if (below) mdsLocal(series) else landmarkMds(series, numLandmarks)
-  }
+  def mds2d(series: DataFrame, gate: Long = Gate.DriverRows,
+      numLandmarks: Int = 1000): DataFrame =
+    // one-collect gate — no cache()+unpersist() on the caller-visible
+    // plan (that would evict a cache entry the caller may share;
+    // Spark's cache manager matches by plan, not reference)
+    Gate.series(series, gate) match {
+      case Some(data) => mdsLocal(series.sparkSession, data)
+      case None => landmarkMds(series, numLandmarks)
+    }
 
-  /** Exact classical MDS on the driver (reference regime, n < gate). */
-  private def mdsLocal(series: DataFrame): DataFrame = {
+  /** Exact classical MDS on the driver (reference regime, n < gate),
+    * over the id-sorted rows: partition-order-independent float sums. */
+  private def mdsLocal(spark: org.apache.spark.sql.SparkSession,
+      data: Array[(Long, Array[Double])]): DataFrame = {
     import breeze.linalg.{DenseMatrix}
-    val spark = series.sparkSession
     import spark.implicits._
-    val data = series.select(col("series_id").cast("long"), col("values"))
-      .orderBy(col("series_id")) // partition-order-independent float sums
-      .as[(Long, Array[Double])].collect()
     val n = data.length
     // squared distances via one BLAS gemm: d²(i,j) = q_i + q_j − 2·(XXᵀ)_ij
     val x = DenseMatrix(data.map(_._2).toIndexedSeq: _*)
@@ -333,12 +329,12 @@ object Embedding {
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    if (!(gate > 0 && series.limit(probe).count() < gate))
-      return aeDistributed(series, imaging, imgSize, cfg)
-    val (ids, z, _) = aeFit(series, imaging, imgSize, cfg)
-    ids.zip(z).map { case (id, e) => (id, e(0), e(1)) }
-      .toSeq.toDF("series_id", "x", "y")
+    aeFit(series, imaging, imgSize, gate, cfg) match {
+      case Some((ids, z, _)) =>
+        ids.zip(z).map { case (id, e) => (id, e(0), e(1)) }
+          .toSeq.toDF("series_id", "x", "y")
+      case None => aeDistributed(series, imaging, imgSize, cfg)
+    }
   }
 
   /** Above-gate conv path: bounded seeded fit (xxhash64-ranked sample,
@@ -395,8 +391,8 @@ object Embedding {
       c: ConvAE.Config): (Array[Array[Double]], Double, Array[Double]) = {
     val spark = series.sparkSession
     import spark.implicits._
-    val key = s"${System.identityHashCode(spark)}|$imaging|$imgSize|$c|" +
-      s"${series.queryExecution.logical.semanticHash()}"
+    val key = graft.queries.Memo.internalKey(spark, s"aedistfit|$imaging|" +
+      s"$imgSize|$c|${series.queryExecution.logical.semanticHash()}")
     aeDistFitCache.synchronized {
       val hit = aeDistFitCache.get(key)
       if (hit != null) return hit
@@ -443,11 +439,8 @@ object Embedding {
       gate: Long = 20000L, cfg: ConvAE.Config = ConvAE.Config()): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    val hist =
-      if (!(gate > 0 && series.limit(probe).count() < gate))
-        aeDistFit(series, imaging, imgSize, cfg.copy(imgSize = imgSize))._3
-      else aeFit(series, imaging, imgSize, cfg)._3
+    val hist = aeFit(series, imaging, imgSize, gate, cfg).map(_._3).getOrElse(
+      aeDistFit(series, imaging, imgSize, cfg.copy(imgSize = imgSize))._3)
     hist.zipWithIndex.map { case (l, i) => (i + 1L, l) }
       .toSeq.toDF("epoch", "loss")
   }
@@ -455,7 +448,9 @@ object Embedding {
   /** Bounded driver-side fit cache: the embedding and history queries
     * share one seeded fit per (session, input, params) — same pattern
     * as the Memo LRU, but the artifact is driver arrays, not a
-    * DataFrame. 4 entries ≈ two (dir × imaging) pairs. */
+    * DataFrame. Keyed by [[graft.queries.Memo.internalKey]], so a new
+    * session never reads an entry fitted under another one. 4 entries ≈
+    * two (dir × imaging) pairs. */
   private val aeFitCache =
     new java.util.LinkedHashMap[String, (Array[Long], Array[Array[Double]], Array[Double])](
       8, 0.75f, true) {
@@ -464,30 +459,43 @@ object Embedding {
         size() > 4
     }
 
-  /** Shared gated-path body: collect images in id order, global-max
-    * normalize (app.py:531-533), bounded seeded fit sample, train.
-    * Memoized driver-side (see [[aeFitCache]]). */
+  /** Shared gated-path body: the driver fit (ids, latents, loss
+    * history) when `series` is under `gate`, else None. The cache (see
+    * [[aeFitCache]]) is read BEFORE the gate collects, so
+    * [[aeEmbed]] and [[aeHistory]] share one fit and the second call
+    * reads no input; a hit still honours this call's gate. A miss
+    * collects the images in id order through the gate, global-max
+    * normalizes them (app.py:531-533), draws the bounded seeded fit
+    * sample, and trains. */
   private def aeFit(series: DataFrame, imaging: String, imgSize: Int,
-      cfg: ConvAE.Config): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val key = s"${System.identityHashCode(series.sparkSession)}|$imaging|" +
-      s"$imgSize|$cfg|${series.queryExecution.logical.semanticHash()}"
-    aeFitCache.synchronized {
-      val hit = aeFitCache.get(key)
-      if (hit != null) return hit
+      gate: Long, cfg: ConvAE.Config)
+      : Option[(Array[Long], Array[Array[Double]], Array[Double])] = {
+    val key = aeFitKey(series, imaging, imgSize, cfg)
+    val hit = aeFitCache.synchronized(Option(aeFitCache.get(key)))
+    hit.filter(_._1.length < gate).orElse {
+      Gate.series(series, gate,
+          graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values")))
+        .map { imgs =>
+          val out = aeFitFrom(imgs, imgSize, cfg)
+          aeFitCache.synchronized { aeFitCache.put(key, out) }
+          out
+        }
     }
-    val out = aeFitUncached(series, imaging, imgSize, cfg)
-    aeFitCache.synchronized { aeFitCache.put(key, out) }
-    out
   }
 
-  private def aeFitUncached(series: DataFrame, imaging: String, imgSize: Int,
+  private def aeFitKey(series: DataFrame, imaging: String, imgSize: Int,
+      cfg: ConvAE.Config): String =
+    graft.queries.Memo.internalKey(series.sparkSession,
+      s"aefit|$imaging|$imgSize|$cfg|${series.queryExecution.logical.semanticHash()}")
+
+  /** Whether `series`' own session holds a driver fit for it (the
+    * session-scoping pin in MemoSpec). */
+  private[graft] def aeFitCached(series: DataFrame, imaging: String,
+      imgSize: Int, cfg: ConvAE.Config = ConvAE.Config()): Boolean =
+    aeFitCache.synchronized(aeFitCache.containsKey(aeFitKey(series, imaging, imgSize, cfg)))
+
+  private def aeFitFrom(imgs: Array[(Long, Array[Double])], imgSize: Int,
       cfg: ConvAE.Config): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val spark = series.sparkSession
-    import spark.implicits._
-    val imgs = series.select(col("series_id").cast("long"),
-        graft.ops.Imaging.fusedImageUdf(imaging, imgSize)(col("values")))
-      .orderBy(col("series_id"))
-      .as[(Long, Array[Double])].collect()
     require(imgs.nonEmpty, "aeEmbed: empty input")
     var mx = 0.0
     imgs.foreach { r => val m = r._2.max; if (m > mx) mx = m }
@@ -516,13 +524,15 @@ object Embedding {
   def pcaVariancePct(series: DataFrame, n: Int): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited count — no cache()+unpersist() on the
+    // one-collect gate, like pcaEmbed — no cache()+unpersist() on the
     // caller-visible plan (see mds2d)
-    if (series.limit(100000).count() < 100000) {
-      val (_, _, ratio) = pcaLocal(series, n)
-      return ratio.zipWithIndex
-        .map { case (v, i) => (i + 1, math.rint(v * 1000) / 10) }
-        .toSeq.toDF("component", "var_pct")
+    Gate.series(series, Gate.DriverRows) match {
+      case Some(data) =>
+        val (_, _, ratio) = pcaLocal(data, n)
+        return ratio.zipWithIndex
+          .map { case (v, i) => (i + 1, math.rint(v * 1000) / 10) }
+          .toSeq.toDF("component", "var_pct")
+      case None =>
     }
     // cache the DERIVED plan (not the caller-visible one) for the
     // head + fit passes, and release it: the variance ratios live in

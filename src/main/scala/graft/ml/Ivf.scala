@@ -20,7 +20,7 @@ import graft.functions.GraftFunctions
 object Ivf {
 
   /** Driver-side centroid cache paired with the Memo'd bucketed table
-    * (same key): nlist × dim doubles — a few KB each. Lifetime is tied
+    * (keyed by its internal key, [[graft.queries.Memo.internalKey]]): nlist × dim doubles — a few KB each. Lifetime is tied
     * to the paired Memo entry: the release listener below drops the
     * centroids whenever the Memo entry leaves (eviction, staleness, or
     * explicit release), so a long-lived JVM touching many sessions or
@@ -46,11 +46,11 @@ object Ivf {
           val t = new Thread(r, "pq-subfit"); t.setDaemon(true); t
         }))
   graft.queries.Memo.onRelease { internalKey =>
-    // internal keys are "sessionUUID|callerKey"; our callerKeys start
-    // with "ivf|" / "pq|" and are exactly the driver-cache keys
+    // internal keys are "sessionUUID|callerKey" — exactly the driver
+    // caches' keys; our callerKeys start with "ivf|" / "pq|"
     val raw = internalKey.substring(internalKey.indexOf('|') + 1)
-    if (raw.startsWith("ivf|")) centersCache.remove(raw)
-    if (raw.startsWith("pq|")) pqBooks.remove(raw)
+    if (raw.startsWith("ivf|")) centersCache.remove(internalKey)
+    if (raw.startsWith("pq|")) pqBooks.remove(internalKey)
   }
 
   /** NOTE on `queryPred`'s column contract: the predicate is resolved
@@ -68,12 +68,13 @@ object Ivf {
     * other ML fits; the repeated-search cost is the bucket-pruned
     * join only, never a re-fit.
     * Session identity in the key: Memo scopes its entries per session
-    * internally, but centersCache must not serve centroids fitted
-    * under a stopped session to a new one. */
+    * internally, and centersCache uses the same internal key, so it
+    * never serves centroids fitted under another session. */
   private def indexed(emb: DataFrame, idCol: String, vecCol: String,
       nlist: Int, seed: Long): (DataFrame, Array[Array[Double]]) = {
     val spark = emb.sparkSession
-    val key = s"ivf|${System.identityHashCode(spark)}|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val key = s"ivf|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val centersKey = graft.queries.Memo.internalKey(spark, key)
     val bucketed = graft.queries.Memo.cached(spark, key) {
       val e = graft.ext.Similarity.prep(emb, idCol, vecCol)
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
@@ -81,7 +82,7 @@ object Ivf {
       val model = new KMeans().setK(nlist).setSeed(seed)
         .setFeaturesCol("__f").setPredictionCol("centroid_id").fit(withVec)
       val centers = model.clusterCenters.map(_.toArray)
-      centersCache(key) = centers
+      centersCache(centersKey) = centers
       // assignment goes through assignWith's argmin — the SAME kernel
       // the streaming ingest uses (VERDICT r9 #3d) — not MLlib's
       // model.transform distance path, whose norm-trick rounding can
@@ -90,7 +91,7 @@ object Ivf {
       // row-identical BY CONSTRUCTION, not just on non-tied inputs.
       assignWith(emb, idCol, vecCol, centers)
     }
-    (bucketed, centersCache(key))
+    (bucketed, centersCache(centersKey))
   }
 
   /** nprobe-nearest-centroid prober over the broadcast centroids. */
@@ -260,7 +261,7 @@ object Ivf {
 
     // int8 codes for the index frame, memoized beside it (same build
     // discipline: codes are part of the offline index, not query work)
-    val keyQ = s"ivfq|${System.identityHashCode(spark)}|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val keyQ = s"ivfq|$nlist|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
     val coded = graft.queries.Memo.cached(spark, keyQ) {
       val scales = bucketed.select(posexplode(col("vn")).as(Seq("i", "x")))
         .groupBy("i").agg(max(abs(col("x"))).as("s"))
@@ -402,7 +403,7 @@ object Ivf {
       nlist: Int, seed: Long): (DataFrame, Array[Array[Double]]) = {
     val (bucketed, centers) = indexed(emb, idCol, vecCol, nlist, seed)
     val spark = emb.sparkSession
-    val key = s"ivfattr|${System.identityHashCode(spark)}|$nlist|$seed|" +
+    val key = s"ivfattr|$nlist|$seed|" +
       s"$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
     val attributed = graft.queries.Memo.cached(spark, key)(
       bucketed.join(emb.drop(vecCol), Seq(idCol)))
@@ -493,7 +494,8 @@ object Ivf {
 
     // offline index artifact: per-subspace codebooks + per-vector codes,
     // memoized beside the IVF index (same build discipline)
-    val keyP = s"pq|${System.identityHashCode(spark)}|$nlist|$mSub|$ksub|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val keyP = s"pq|$nlist|$mSub|$ksub|$seed|$idCol|$vecCol|${emb.queryExecution.logical.semanticHash()}"
+    val booksKey = graft.queries.Memo.internalKey(spark, keyP)
     val coded = graft.queries.Memo.cached(spark, keyP) {
       val dimRow = bucketed.agg(min(size(col("vn"))).as("mn"),
         max(size(col("vn"))).as("mx")).head()
@@ -541,7 +543,7 @@ object Ivf {
           // holding the Memo monitor if a fit job wedges
           scala.concurrent.duration.Duration(10, "min")).toArray
         finally fitIn.unpersist()
-      pqBooks(keyP) = books
+      pqBooks(booksKey) = books
       val bc = spark.sparkContext.broadcast(books)
       // the offline ENCODER: per-row per-subspace argmin against the
       // broadcast codebooks; strict < ties to the smaller centroid id
@@ -562,7 +564,7 @@ object Ivf {
       })
       bucketed.withColumn("pq_code", enc(col("vn")))
     }
-    val books = pqBooks(keyP)
+    val books = pqBooks(booksKey)
     val dsub = books(0)(0).length
     // flattened codebook literal: entry m·ksub + c = centroid subvector
     val bookLit = typedLit(books.flatMap(_.map(_.toSeq)).toSeq)

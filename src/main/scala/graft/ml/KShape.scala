@@ -220,20 +220,18 @@ object KShape {
   def fit(series: DataFrame, k: Int, maxIter: Int = 10): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    // gate probe via a limited COUNT (column-pruned — no series arrays
-    // move for the probe; a limit+collect probe would ship gate+1 full
-    // arrays to the driver on large inputs). No cache()+unpersist()
-    // here — unpersisting a caller-visible plan evicts the cache entry
-    // a caller may share (Spark's cache manager matches by plan, not
-    // by reference).
-    val gate = 100000
-    if (series.limit(gate).count() < gate) { // strict: n == gate goes distributed, like the sibling gates
-      val data = series.select(col("series_id").cast("long"), col("values"))
-        .orderBy(col("series_id")) // partition-order-independent results
-        .as[(Long, Array[Double])].collect()
-      return localFit(data, k, maxIter).toSeq.toDF("series_id", "cluster")
+    // one-collect gate ([[Gate]]): under it the id-sorted rows it
+    // collected are the driver fit's input (partition-order-independent
+    // results); at or above it they are dropped, so the distributed
+    // path pays one bounded collect of at most Gate.DriverRows series,
+    // the largest input the driver path already accepts. No
+    // cache()+unpersist() here — unpersisting a caller-visible plan
+    // evicts the cache entry a caller may share (Spark's cache manager
+    // matches by plan, not by reference).
+    Gate.series(series, Gate.DriverRows) match {
+      case Some(data) => localFit(data, k, maxIter).toSeq.toDF("series_id", "cluster")
+      case None => fitDistributed(series, k, maxIter)
     }
-    fitDistributed(series, k, maxIter)
   }
 
   private[graft] def fitDistributed(series: DataFrame, k: Int, maxIter: Int): DataFrame = {

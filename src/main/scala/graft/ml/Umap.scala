@@ -215,16 +215,11 @@ object Umap {
       numLandmarks: Int = 1024): DataFrame = {
     val spark = series.sparkSession
     import spark.implicits._
-    val probe = math.min(math.max(gate, 1L), Int.MaxValue.toLong).toInt
-    val below = gate > 0 && series.limit(probe).count() < gate
-    val collected0 = if (below) {
-      series.select(col("series_id").cast("long"), col("values"))
-        .orderBy("series_id").as[(Long, Array[Double])].collect()
-    } else Array.empty[(Long, Array[Double])]
-    if (below) {
-      val out = fitLocal(collected0.map(_._1), collected0.map(_._2),
-        nNeighbors, epochs, seed)
-      return out.toSeq.toDF("series_id", "x", "y")
+    Gate.series(series, gate) match {
+      case Some(data) =>
+        val out = fitLocal(data.map(_._1), data.map(_._2), nNeighbors, epochs, seed)
+        return out.toSeq.toDF("series_id", "x", "y")
+      case None =>
     }
     // landmark path: seeded deterministic sample by xxhash64 rank —
     // partitioning-independent, no driver shuffle of the full corpus

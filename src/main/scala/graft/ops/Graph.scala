@@ -118,13 +118,14 @@ object Graph {
     // join+aggregate+checkpoint jobs (the per-iteration round-trips
     // dominate wall time on small graphs; a domain-level graph is
     // node-bounded even when the underlying corpus is 100 TB). The
-    // limit-probe collect bounds driver memory: one row past the gate
-    // abandons the path and the distributed loop below runs unchanged
-    // (forced in GraphSpec's parity test via maxDriverEdges = 0).
-    if (maxDriverEdges > 0 && nNodes <= maxDriverEdges) {
-      val probe = math.min(maxDriverEdges, (Int.MaxValue - 8).toLong).toInt
-      val collected = e2.limit(probe + 1).collect()
-      if (collected.length <= probe) {
+    // gate's one bounded collect ([[graft.ml.Gate]]) caps driver memory:
+    // one row past the gate abandons the path and the distributed loop
+    // below runs unchanged (forced in GraphSpec's parity test via
+    // maxDriverEdges = 0).
+    if (nNodes <= maxDriverEdges) {
+      val gated = graft.ml.Gate.local(e2, maxDriverEdges, inclusive = true)
+      if (gated.isDefined) {
+        val collected = gated.get
         val spark = nodes.sparkSession
         import spark.implicits._
         val nodeRows = nd.select(col("node")).collect()

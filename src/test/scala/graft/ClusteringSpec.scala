@@ -50,6 +50,31 @@ class ClusteringSpec extends SparkSpec {
     assert(reps == Map(0 -> 3L, 1 -> 4L))
   }
 
+  test("centroid representatives: driver path matches the distributed path") {
+    // irregular clusters, a long cluster id, noise, an exact distance tie
+    // (ids 31 and 32 sit symmetric about their cluster's mean) and rows
+    // spread over several partitions, so the distributed sums are
+    // combined in another order than the driver's id-order sums
+    val rows = (0 until 30).map { i =>
+      (i.toLong, math.sin(i * 1.7) * (i % 4 + 1), math.cos(i * 0.9) * 3 + i % 3, (i % 3).toLong)
+    } ++ Seq((31L, 100.0, 0.0, 7L), (32L, 102.0, 0.0, 7L), (33L, -50.0, -50.0, -1L))
+    val assigned = rows.toDF("series_id", "x", "y", "cluster").repartition(3)
+    val drv = TraceBack.centroidRepresentatives(assigned)
+    val dist = TraceBack.centroidRepresentativesDistributed(assigned)
+    assert(drv.schema == dist.schema)
+    def byCluster(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double, Double)].collect().map(r => r._1 -> r).toMap
+    val (a, b) = (byCluster(drv), byCluster(dist))
+    assert(a.keySet == Set(0L, 1L, 2L, 7L) && a.keySet == b.keySet)
+    a.foreach { case (c, (_, rep, cx, cy)) =>
+      val (_, rep2, cx2, cy2) = b(c)
+      assert(rep == rep2, s"cluster $c: rep_id $rep vs $rep2")
+      assert(math.abs(cx - cx2) <= 1e-12 && math.abs(cy - cy2) <= 1e-12,
+        s"cluster $c: centroid ($cx, $cy) vs ($cx2, $cy2)")
+    }
+    assert(a(7L)._2 == 31L, "a distance tie goes to the lowest series_id")
+  }
+
   test("DBSCAN labels far points −1 and separates the blobs (C2+C7)") {
     val pts = (
       (0 until 20).map(i => (i.toLong, 0.0 + (i % 5) * 0.1, 0.0 + (i / 5) * 0.1)) ++

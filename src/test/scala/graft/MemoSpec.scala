@@ -91,6 +91,26 @@ class MemoSpec extends SparkSpec {
       Memo.internalKey(other, key))) == 2)
   }
 
+  test("a driver-side aeFit entry built under one session is not served to a new one") {
+    val cfg = graft.ml.ConvAE.Config(epochs = 2, seed = 5)
+    def series(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      (0 until 6).map(i => (i.toLong, Array.tabulate(12)(t => math.sin((t + 1) * (i + 1) * 0.3))))
+        .toDF("series_id", "values")
+    }
+    val mine = series(spark)
+    graft.ml.Embedding.aeEmbed(mine, "gaf", 8, cfg = cfg).collect()
+    assert(graft.ml.Embedding.aeFitCached(mine, "gaf", 8, cfg))
+    val other = spark.newSession()
+    val theirs = series(other)
+    assert(theirs.queryExecution.logical.semanticHash() ==
+      mine.queryExecution.logical.semanticHash(), "the two inputs must be the same plan")
+    assert(!graft.ml.Embedding.aeFitCached(theirs, "gaf", 8, cfg),
+      "a new session must not see another session's fit")
+    graft.ml.Embedding.aeEmbed(theirs, "gaf", 8, cfg = cfg).collect()
+    assert(graft.ml.Embedding.aeFitCached(theirs, "gaf", 8, cfg))
+  }
+
   test("releaseStale survives a lastTouch-less entry (treated as stale, no NPE)") {
     // the invariant is maintained by cached(); this pins the DEFENSIVE
     // behavior: an untracked entry must be released, not NPE mid-suite
